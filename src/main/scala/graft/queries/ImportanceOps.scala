@@ -168,6 +168,9 @@ object ImportanceOps {
       .orderBy(col("lang"))
   }
 
+  // Int64 budget: |lp_micro| <= ln(n_tr + v) * 10^6 < 2^25 micronats while
+  // n_tr + v < 10^13, so sum(c_va * lp_micro) <= n_va * 2^25 < 2^63 for
+  // any validation slice under 2^38 tokens.
   val q191Oracle: String =
     """WITH toks AS (
       |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
