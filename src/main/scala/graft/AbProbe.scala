@@ -5,11 +5,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 
-/** Standing same-JVM A/B perf probe (VERDICT r14 item 3 — the
-  * generalization of round-14's BasketProbe): this host has no quiet
-  * window, so whole-sweep bench artifacts keep generating false
-  * cross-round regressions (r13: q41; r14: the sf1 total) that cost a
-  * round each to clear. The only variance control available is
+/** Standing same-JVM A/B perf probe (VERDICT r14 item 3): this host
+  * has no quiet window, so whole-sweep bench artifacts keep generating
+  * false cross-round regressions (r13: q41; r14: the sf1 total) that
+  * cost a round each to clear. The only variance control available is
   * INTERLEAVING: run the compared queries back-to-back in one JVM,
   * repeatedly, so any host-contention window hits all of them equally,
   * and report medians + spread. Protocol (BASELINE.md): sweep artifacts

@@ -36,13 +36,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_IO_CODEC parameterizes the shuffle/spill codec for
-      // the guide-§2.3 lz4-vs-zstd rung measurement (OPTIMIZATION r17).
-      // Unset = Spark's lz4 default, so the driver's bench conditions
-      // are untouched; the measured trade at the sf10 rung is recorded
-      // in OPTIMIZATION_r17.md and the production profile.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     GraftExtensions.register(spark)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Tables.table
 import graft.functions.CrossHash
 import graft.functions.CrossHash.{P, h60Sql, universalSql}
@@ -110,26 +111,22 @@ object Dedup {
         col("band.bh").as("bh"))
   }
 
-  /** Memoized default-cap candidate pairs per (session, dir) — the
-    * PQ-codebook/kmClusters discipline applied to the LSH frame: NINE
-    * queries (q21/q78/q87/q147/q156/q157/q160/q189/q201) consume the
-    * identical banding + self-join, and before this memo each recomputed
-    * it from the raw corpus. `localCheckpoint` materializes the pair
-    * frame once (pairs are bounded by banding + the hot-bucket cap —
-    * never corpus-sized); keyed by applicationId so a stopped session's
-    * blocks are never served to a new one. The capped overload below
-    * stays un-memoized (spec hook).
-    */
-  private val candCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** UNSORTED LSH candidate pairs with both signatures — shared by q21
     * (which scores and sorts them) and q78 (which only needs the edge
     * list; consuming q21 directly would drag its global ORDER BY
     * range-exchange into the checkpoint for nothing).
+    *
+    * Memoized at the default cap — the PQ-codebook/kmClusters discipline
+    * applied to the LSH frame: NINE queries
+    * (q21/q78/q87/q147/q156/q157/q160/q189/q201) consume the identical
+    * banding + self-join, and before this memo each recomputed it from
+    * the raw corpus. `localCheckpoint` materializes the pair frame once
+    * (pairs are bounded by banding + the hot-bucket cap — never
+    * corpus-sized). The capped overload below stays un-memoized (spec
+    * hook).
     */
   def candidatePairs(spark: SparkSession, dir: String): DataFrame =
-    candCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir",
+    Artifacts.get(spark, dir, "Dedup.candidatePairs")(
       candidatePairs(spark, dir, MaxBucketDocs).localCheckpoint())
 
   /** Memoized connected-components labels + drop count over the
@@ -139,18 +136,15 @@ object Dedup {
     * `localCheckpoint`'ed so the final star-map join is not replayed
     * per consumer.
     */
-  private val ccCache =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, Long)]
-
   private[graft] def ccLabels(
       spark: SparkSession, dir: String): (DataFrame, Long) =
-    ccCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir", {
+    Artifacts.get(spark, dir, "Dedup.ccLabels") {
       val edges = candidatePairs(spark, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, nDropped) =
         graft.ops.ConnectedComponents.runWithDropCount(edges)
       (labels.localCheckpoint(), nDropped)
-    })
+    }
 
   /** As above with an explicit hot-bucket cap (spec hook). The cap's
     * row_number window partitions by exactly the join keys, so its

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Tables.table
 import graft.functions.{CrossHash, VectorOps}
 
@@ -785,28 +786,24 @@ object EvalOps {
   private[graft] case class KnModel(
       bc: DataFrame, ctx: DataFrame, cont: DataFrame, nbt: DataFrame)
 
-  private val knCache =
-    scala.collection.concurrent.TrieMap.empty[String, KnModel]
-
   /** Memoized per (session, dir): the KN bigram model trained on the
     * `train` split (the q218 trainedMerges pattern — the model is an
     * ARTIFACT; q244 and the streaming scorer must read the same one).
     * Only `bc` is materialized; the three reductions derive from it.
     */
   private[graft] def knModel(spark: SparkSession, dir: String): KnModel =
-    knCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:$dir", {
-        val bc = bigramsOf(table(spark, dir, "documents"))
-          .filter(col("split") === "train")
-          .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("bcnt"))
-          .localCheckpoint()
-        KnModel(
-          bc,
-          bc.groupBy(col("prev"))
-            .agg(sum(col("bcnt")).as("ccnt"), count(lit(1)).as("n1p")),
-          bc.groupBy(col("cur")).agg(count(lit(1)).as("cont")),
-          bc.agg(count(lit(1)).as("nbt")))
-      })
+    Artifacts.get(spark, dir, "EvalOps.knModel") {
+      val bc = bigramsOf(table(spark, dir, "documents"))
+        .filter(col("split") === "train")
+        .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("bcnt"))
+        .localCheckpoint()
+      KnModel(
+        bc,
+        bc.groupBy(col("prev"))
+          .agg(sum(col("bcnt")).as("ccnt"), count(lit(1)).as("n1p")),
+        bc.groupBy(col("cur")).agg(count(lit(1)).as("cont")),
+        bc.agg(count(lit(1)).as("nbt")))
+    }
 
   /** Scores a bigram frame `(…, prev, cur)` against a [[KnModel]],
     * appending the exact integer bit-surprisal `surp` plus the `ccnt`/

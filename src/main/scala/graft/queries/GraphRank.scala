@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Tables.table
 
 /** Source-authority ranking over the syndication graph (q123) — the
@@ -61,22 +62,19 @@ object GraphRank {
     */
   val Iterations: Int = 4
 
-  /** Memoized directed syndication edges per (session, dir) — q123,
-    * q161 and q206 walk the identical corpus-scale shingle chain to the
-    * domain-sized edge list (the [[Dedup.candidatePairs]] discipline;
-    * q169 shares only the prefix up to the verified PAIRS, not the edge
-    * projection, and keeps its own path). The checkpointed frame is
-    * bounded by distinct source pairs.
-    */
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** Directed syndication edges (src_from = copier, src_to = original),
     * distinct source pairs. Package-private so the spec can re-rank the
     * collected edge list from first principles.
+    *
+    * Memoized per (session, dir) — q123, q161 and q206 walk the
+    * identical corpus-scale shingle chain to the domain-sized edge list
+    * (the [[Dedup.candidatePairs]] discipline; q169 shares only the
+    * prefix up to the verified PAIRS, not the edge projection, and keeps
+    * its own path). The checkpointed frame is bounded by distinct source
+    * pairs.
     */
   private[graft] def syndicationEdges(spark: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir", {
+    Artifacts.get(spark, dir, "GraphRank.syndicationEdges") {
       val ds = Shingles.rareHashes(table(spark, dir, "documents"), Seq("source"))
       val pairs = ds.select(col("h"), col("doc_id").as("da"), col("source").as("sa"))
         .join(ds.select(col("h"), col("doc_id").as("db"), col("source").as("sb")),
@@ -87,7 +85,7 @@ object GraphRank {
         .filter(col("shared") >= MinSharedShingles)
       pairs.select(col("sb").as("src_from"), col("sa").as("src_to")).distinct()
         .localCheckpoint()
-    })
+    }
 
   /** q123: per-source out/in degree and fixed-point PageRank after
     * [[Iterations]] rounds, highest authority first.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Tables.table
 import graft.functions.CrossHash
 import graft.functions.CrossHash.h60Sql
@@ -478,12 +479,9 @@ object ReleaseOps {
     * instead of recomputing the corpus projection each time; the same
     * memo discipline as the PQ codebooks and [[Dedup.candidatePairs]].
     */
-  private val fpCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[queries] def assignedFps(
       spark: SparkSession, dir: String): DataFrame =
-    fpCache.getOrElseUpdate(s"fps:${spark.sparkContext.applicationId}:$dir",
+    Artifacts.get(spark, dir, "ReleaseOps.assignedFps")(
       table(spark, dir, "documents")
         .select(col("doc_id"), col("lang"),
           CrossHash.h60(col("text")).as("fp"),
@@ -495,7 +493,7 @@ object ReleaseOps {
     */
   private[queries] def trainFpSet(
       spark: SparkSession, dir: String): DataFrame =
-    fpCache.getOrElseUpdate(s"train:${spark.sparkContext.applicationId}:$dir",
+    Artifacts.get(spark, dir, "ReleaseOps.trainFpSet")(
       assignedFps(spark, dir).filter(col("split") === "train")
         .select(col("fp")).distinct().localCheckpoint())
 
@@ -638,11 +636,8 @@ object ReleaseOps {
     * once over [[trainFpSet]] and reused across reruns (1 MiB of
     * bounded coordination state, like a codebook).
     */
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Byte]]
-
   private def trainFpBloom(spark: SparkSession, dir: String): Array[Byte] =
-    bloomCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir", {
+    Artifacts.get(spark, dir, "ReleaseOps.trainFpBloom") {
       import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
       import org.apache.spark.sql.graftbridge.ColumnBridge
       trainFpSet(spark, dir)
@@ -650,7 +645,7 @@ object ReleaseOps {
             ColumnBridge.expression(xxhash64(col("fp"))))
           .toAggregateExpression()).as("bf"))
         .head.getAs[Array[Byte]](0)
-    })
+    }
 
   def q162(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
@@ -1032,12 +1027,9 @@ object ReleaseOps {
     * [[ReleaseOps.trainFpSet]]. The set is gram-hash-only (8-byte
     * rows), so the checkpoint is small relative to the corpus.
     */
-  private val gramCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[queries] def trainGramSet(
       spark: SparkSession, dir: String): DataFrame =
-    gramCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir",
+    Artifacts.get(spark, dir, "ReleaseOps.trainGramSet")(
       explodedGramHashes(
         table(spark, dir, "documents")
           .select(col("doc_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Tables.table
 import graft.functions.VectorOps
 import graft.ops.KMeans
@@ -221,20 +222,15 @@ object Similarity {
     * result. Returns the (vec_id, embedding, cluster) frame AND the
     * settled (cent_id, cq) codebook frame, both `localCheckpoint`'ed so
     * the lineage (coarse + fine Lloyd rounds) is not replayed per
-    * consumer. Keyed by applicationId so a stopped session's
-    * checkpointed blocks are never served to a new one. The corpus
-    * count that sizes k is one driver-side scalar; the codebook itself
-    * stays a DISTRIBUTED k-row frame (k = n/200 is corpus-proportional —
-    * at 10⁹ vectors it is a 5M-row × 64-dim frame, over driver and
-    * broadcast limits by design; consumers broadcast their own small
-    * side against it, never the codebook).
+    * consumer. The corpus count that sizes k is one driver-side scalar;
+    * the codebook itself stays a DISTRIBUTED k-row frame (k = n/200 is
+    * corpus-proportional — at 10⁹ vectors it is a 5M-row × 64-dim
+    * frame, over driver and broadcast limits by design; consumers
+    * broadcast their own small side against it, never the codebook).
     */
-  private val kmCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame)]
-
   private def kmFit(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    kmCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir", {
+    Artifacts.get(spark, dir, "Similarity.kmFit") {
       val emb = table(spark, dir, "embeddings")
       val k = kForCorpus(emb.count())
       val km = KMeans.fitTwoLevel(emb, "vec_id", "embedding",
@@ -245,7 +241,7 @@ object Similarity {
         .select(col("vec_id"), col("embedding"), col("cluster"))
         .localCheckpoint(),
         km.centroids.localCheckpoint())
-    })
+    }
 
   private[graft] def kmClusters(spark: SparkSession, dir: String): DataFrame =
     kmFit(spark, dir)._1

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Tables.table
 import graft.functions.VectorOps
 
@@ -42,14 +43,11 @@ object Similarity2 {
     * (session, dir): one narrow count(*), shared by all four consumers
     * (q42/q103/q110/q246).
     */
-  private val bpbCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
   private[queries] def bitsPerBand(spark: SparkSession, dir: String): Int =
-    bpbCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir", {
+    Artifacts.get(spark, dir, "Similarity2.bitsPerBand") {
       val n = table(spark, dir, "embeddings").count()
       bitsForCount(n)
-    })
+    }
 
   /** The pure derivation rule (spec hook — engine and model share it). */
   private[graft] def bitsForCount(n: Long): Int = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Tables.table
 
 /** q158-q159: product quantization (PQ) — the ANN compression scheme a
@@ -71,18 +72,17 @@ object Similarity3 {
     * Lloyd training (and its corpus scans) twice for a bit-identical
     * result. `subs` is localCheckpoint'ed once here and reused for
     * train, encode, and the probe table; the codebook is a driver-side
-    * M·k-row frame, cheap to rebuild from its map. Keyed by
-    * applicationId so a stopped session's checkpointed blocks are never
-    * served to a new one.
+    * M·k-row frame, cheap to rebuild from its map. `rotated` fits the
+    * q262 OPQ layout ([[subVectorsRotated]]) as its own artifact.
     */
-  private val fitCache =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame)]
-
-  private def fitted(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    fitCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir", {
-      val subs = subVectors(spark, dir).localCheckpoint()
+  private def fitted(spark: SparkSession, dir: String,
+      rotated: Boolean = false): (DataFrame, DataFrame) =
+    Artifacts.get(spark, dir,
+        if (rotated) "Similarity3.fittedRotated" else "Similarity3.fitted") {
+      val subs = (if (rotated) subVectorsRotated(spark, dir)
+        else subVectors(spark, dir)).localCheckpoint()
       (subs, pqFit(spark, subs))
-    })
+    }
 
   private def pqFit(spark: SparkSession, subs: DataFrame): DataFrame = {
     import spark.implicits._
@@ -161,14 +161,11 @@ object Similarity3 {
     * the index TABLE is as cacheable as the codebook that built it
     * (M small ints per vector, checkpointed).
     */
-  private val codeCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private def encoded(spark: SparkSession, dir: String): DataFrame =
-    codeCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir", {
+    Artifacts.get(spark, dir, "Similarity3.encoded") {
       val (subs, cb) = fitted(spark, dir)
       encode(subs, cb).localCheckpoint()
-    })
+    }
 
   // ---------------------------------------------------------------- q158
 
@@ -404,16 +401,6 @@ object Similarity3 {
       .select(col("vec_id"), posexplode(array(slices: _*)).as(Seq("s", "xq")))
   }
 
-  /** Memoized rotated (subs, codebook) — the q262 twin of [[fitted]]. */
-  private val rotCache =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame)]
-
-  private def fittedRotated(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    rotCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$dir", {
-      val subs = subVectorsRotated(spark, dir).localCheckpoint()
-      (subs, pqFit(spark, subs))
-    })
-
   /** q262: OPQ-style PRE-ROTATION for product quantization (Ge et al.
     * 2013, "Optimized Product Quantization" — the parametric insight:
     * PQ's per-subspace error depends on how dimensions are ALLOCATED to
@@ -436,7 +423,7 @@ object Similarity3 {
   def q262(spark: SparkSession, dir: String): DataFrame = {
     val base = encoded(spark, dir).groupBy(col("s"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("resid")).as("resid_base"))
-    val (rsubs, rcb) = fittedRotated(spark, dir)
+    val (rsubs, rcb) = fitted(spark, dir, rotated = true)
     val rot = encode(rsubs, rcb).groupBy(col("s"))
       .agg(sum(col("resid")).as("resid_rot"))
     base.join(rot, Seq("s"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.Tables.table
 
 /** Tokenizer TRAINING support (q124) — the other half of the tokenizer
@@ -255,13 +256,9 @@ object TokenizerOps {
     * q220 APPLIES it corpus-wide; the training loop is identical, so
     * the PQ-codebook/CC-labels memo discipline applies.
     */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Int, String, String, Long)]]
-
   private[queries] def trainedMerges(
       spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    mergeCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:$dir",
+    Artifacts.get(spark, dir, "TokenizerOps.trainedMerges")(
       trainMerges(spark, dir))
 
   private def trainMerges(
