@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
-
 /** Standing same-JVM A/B perf probe (VERDICT r14 item 3): this host
   * has no quiet window, so whole-sweep bench artifacts keep generating
   * false cross-round regressions (r13: q41; r14: the sf1 total) that
@@ -20,16 +18,18 @@ import org.apache.spark.sql.DataFrame
   *   sbt "runMain graft.AbProbe <sfDir> <reps> <name1,name2,...>"
   *   tools/abprobe <sfDir> <reps> <name1,name2,...>
   *
-  * Names are substring-matched against the `SparkEntry.queries`
-  * registry (the Bench filter semantics), so `q147,q156,q158` works.
-  * Execution order is round-robin: rep 1 runs every query once in list
-  * order, then rep 2, ... — never reps× back-to-back per query, which
-  * would re-create the sweep's vulnerability to a single slow window.
-  * Each query is materialized through the `noop` sink (the Bench
+  * Queries are chosen by `Bench.select`, the rule every harness main
+  * shares: the `SparkEntry.queries` registry sorted by name, keeping
+  * each name that contains any token, so `q147,q156,q158` works; a
+  * token that matches no query fails before the session starts.
+  * Each rep is one `Bench.sweep`: every query once in name order, then
+  * the next rep — never reps× back-to-back per query, which would
+  * re-create the sweep's vulnerability to a single slow window. Each
+  * query is materialized through the `noop` sink (the Bench
   * discipline: keeps the final sort and every projected expression in
-  * the executed plan). One warm-up pass over the whole list runs first
-  * and is NOT counted — JIT + parquet-footer caches otherwise tax only
-  * the first query in the list.
+  * the executed plan). One warm-up sweep runs first and is NOT counted
+  * — JIT + parquet-footer caches otherwise tax only the first query in
+  * the list. Any failed run ends the probe with exit status 1.
   *
   * Output: per query, every reading plus median and min–max spread;
   * then one JSON line {"probe":..., "queries":{name:{"median":...,
@@ -42,68 +42,42 @@ object AbProbe {
       "usage: AbProbe <sfDir> <reps> <name1,name2,...>")
     val sfDir = args(0)
     val reps = args(1).toInt
-    val wanted = args(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val wanted = Bench.tokens(args(2))
     require(reps > 0 && wanted.nonEmpty, "need reps > 0 and a query list")
-
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted.exists(n.contains) }
-    val missed = wanted.filterNot(w => names.exists(_._1.contains(w)))
-    require(missed.isEmpty, s"no registered query matches: ${missed.mkString(", ")}")
+    val names = Bench.select(wanted)
 
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
-    def runOnce(fn: (org.apache.spark.sql.SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+    // a failed run has no reading to compare: stop at the first one
+    def orExit(pass: Seq[(String, (Double, Option[String]))]): Seq[(String, Double)] = {
+      if (pass.exists { case (_, (_, err)) => err.nonEmpty }) { spark.stop(); sys.exit(1) }
+      pass.map { case (n, (t, _)) => n -> t }
     }
 
     // uncounted warm-up pass (JIT, parquet footers, codegen cache)
-    names.foreach { case (n, fn) =>
-      try runOnce(fn) catch { case e: Throwable =>
-        System.err.println(s"[abprobe] $n warmup FAILED: ${e.getMessage}"); throw e }
-    }
+    orExit(Bench.sweep(spark, sfDir, names))
 
     // interleaved counted reps: round-robin over the list
-    val readings = collection.mutable.Map(names.map(_._1 -> Vector.empty[Double]): _*)
-    (1 to reps).foreach { rep =>
-      names.foreach { case (n, fn) =>
-        val t = runOnce(fn)
-        readings(n) = readings(n) :+ t
-        println(f"[abprobe] rep $rep%2d $n%-28s $t%8.2f s")
-      }
+    val passes = (1 to reps).map { rep =>
+      val pass = orExit(Bench.sweep(spark, sfDir, names))
+      pass.foreach { case (n, t) => println(f"[abprobe] rep $rep%2d $n%-28s $t%8.2f s") }
+      pass.toMap
     }
-
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
+    val readings = names.map { case (n, _) => n -> passes.map(_(n)) }
 
     println(f"\n${"query"}%-28s ${"median"}%8s ${"min"}%8s ${"max"}%8s  runs")
-    names.foreach { case (n, _) =>
-      val r = readings(n)
-      println(f"$n%-28s ${median(r)}%8.2f ${r.min}%8.2f ${r.max}%8.2f  " +
+    readings.foreach { case (n, r) =>
+      println(f"$n%-28s ${Bench.median(r)}%8.2f ${r.min}%8.2f ${r.max}%8.2f  " +
         r.map(t => f"$t%.2f").mkString(" "))
     }
 
-    def ms(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(v))
-    // minimal JSON string escape (quote/backslash/control) — the sf
-    // path is operator-supplied and lands in a committed artifact
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val qJson = names.map { case (n, _) =>
-      val r = readings(n)
-      s""""$n":{"median":${ms(median(r))},"runs":[${r.map(ms).mkString(",")}]}"""
+    val qJson = readings.map { case (n, r) =>
+      s""""$n":{"median":${Bench.ms(Bench.median(r))},"runs":[${r.map(Bench.ms).mkString(",")}]}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"probe":"abprobe","sf":"${esc(sfDir)}","reps":$reps,"queries":$qJson}"""
+      s"""{"probe":"abprobe","sf":"${Bench.esc(sfDir)}","reps":$reps,"queries":$qJson}"""
     println(json)
     sys.env.get("SPARK_GRAFT_ABPROBE_OUT").foreach { f =>
       Files.write(Paths.get(f), json.getBytes(StandardCharsets.UTF_8))

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every registered query on
   * `SPARK_GRAFT_SF_DIR` and reports per-query wall times.
@@ -41,10 +41,89 @@ import org.apache.spark.sql.SparkSession
   * of being silently swallowed as fast times.
   */
 object Bench {
+  type QueryFn = (SparkSession, String) => DataFrame
+
+  /** Comma-separated name tokens, blanks dropped. */
+  def tokens(csv: String): Seq[String] =
+    csv.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** The one selection rule every harness main shares: the
+    * `SparkEntry.queries` registry sorted by name, keeping names that
+    * contain any token. No tokens selects every query; a token that
+    * matches no query is an operator typo and fails, naming the token,
+    * instead of quietly shrinking the run.
+    */
+  def select(tokens: Seq[String]): Seq[(String, QueryFn)] = {
+    val all = SparkEntry.queries.toSeq.sortBy(_._1)
+    val missed = tokens.filterNot(t => all.exists(_._1.contains(t)))
+    require(missed.isEmpty, s"no registered query matches: ${missed.mkString(", ")}")
+    if (tokens.isEmpty) all else all.filter { case (n, _) => tokens.exists(n.contains) }
+  }
+
+  /** Seconds for one `fn(spark, dir)` materialized through the `noop`
+    * sink; a failure propagates.
+    */
+  def runNoop(spark: SparkSession, dir: String, fn: QueryFn): Double = {
+    val t0 = System.nanoTime()
+    fn(spark, dir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** One round-robin pass: every query once, in order. Each reading is
+    * (seconds, error); a failing query is reported on stderr and in its
+    * reading, and the pass goes on.
+    */
+  def sweep(spark: SparkSession, dir: String, names: Seq[(String, QueryFn)])
+      : Seq[(String, (Double, Option[String]))] =
+    names.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val err = try { runNoop(spark, dir, fn); None } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          Some(Option(e.getMessage).getOrElse(e.getClass.getName))
+      }
+      name -> ((System.nanoTime() - t0) / 1e9, err)
+    }
+
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  /** JSON string-body escape: quote, backslash and every control char. */
+  def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  // Locale.ROOT: the default-locale `f` interpolator renders a comma
+  // decimal separator under e.g. de_DE, which is invalid JSON.
+  def ms(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f",
+    Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
+
+    // optional subset (local iteration / headroom runs): comma-separated
+    // name substrings, e.g. SPARK_GRAFT_BENCH_QUERIES=q01,q21,q33.
+    // Set-but-empty fails fast (ADVICE r15): Some(Seq()) would select
+    // zero queries yet look like a full sweep to anything not checking
+    // query_count — an operator typo, not a meaningful request.
+    val filter = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").map(tokens)
+    if (filter.exists(_.isEmpty)) {
+      System.err.println("[bench] SPARK_GRAFT_BENCH_QUERIES is set but " +
+        "selects no queries — unset it for a full sweep or name at least one token")
+      sys.exit(2)
+    }
+    val names = select(filter.getOrElse(Nil))
+
     val spark = GraftSession.local(cpus)
     // ERROR, not the session default WARN: BENCH_r07 showed the driver's
     // ~2 KB TAIL capture ending in a flood of WindowExec /
@@ -54,45 +133,6 @@ object Bench {
     // silence everything below ERROR so the tail ends with our JSON.
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
-
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-    // optional subset (local iteration / headroom runs): comma-separated
-    // name substrings, e.g. SPARK_GRAFT_BENCH_QUERIES=q01,q21,q33.
-    // Set-but-empty fails fast (ADVICE r15): Some(Seq()) would select
-    // zero queries yet look like a full sweep to anything not checking
-    // query_count — an operator typo, not a meaningful request.
-    val filter = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    if (filter.exists(_.isEmpty)) {
-      System.err.println("[bench] SPARK_GRAFT_BENCH_QUERIES is set but " +
-        "selects no queries — unset it for a full sweep or name at least one token")
-      spark.stop(); sys.exit(2)
-    }
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => filter.forall(_.exists(n.contains)) }
-
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName))
-      }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
 
     // iters full sweeps (not iters× back-to-back per query): a transient
     // host-contention window then hits each query at most once, and the
@@ -110,14 +150,9 @@ object Bench {
     val sweepGc = collection.mutable.ArrayBuffer.empty[Long]
     val sweeps = (1 to iters).map { _ =>
       val g0 = gcMs
-      val r = names.map { case (name, fn) => name -> runOnce(name, fn) }.toMap
+      val r = sweep(spark, sfDir, names).toMap
       sweepGc += (gcMs - g0)
       r
-    }
-
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
 
     val medians = names.map { case (name, _) =>
@@ -169,11 +204,10 @@ object Bench {
     // the exception: the sf10 rung is a declared subset whose artifact
     // needs iter_totals/iter_queries too (the stdout compact line only
     // carries medians), and naming the file is the operator saying so.
-    // names.nonEmpty guards the exception: a stale exported OUT var plus
-    // a typo'd filter must not replace a good artifact with {} (r14
-    // review finding).
-    if (filter.isEmpty ||
-        (sys.env.contains("SPARK_GRAFT_BENCH_OUT") && names.nonEmpty)) {
+    // A stale exported OUT var plus a typo'd filter cannot replace a good
+    // artifact with {} (r14 review finding): `select` fails on a token
+    // that matches no query before anything runs.
+    if (filter.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_OUT")) {
       try Files.write(repoRoot.resolve(localFile), full.getBytes(StandardCharsets.UTF_8))
       catch { case e: Throwable => System.err.println(s"[bench] could not write $localFile: $e") }
     }
@@ -184,10 +218,6 @@ object Bench {
     // must parse goes FIRST, compact (ms precision — full nanosecond
     // detail lives in the local artifact), and nothing else is printed
     // between it and the short final summary.
-    // Locale.ROOT: the default-locale `f` interpolator renders a comma
-    // decimal separator under e.g. de_DE, which is invalid JSON.
-    def ms(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(v))
     def cs(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f",
       Double.box(v))
     // compact keys: bare query id ("q177" for "q177_zipf_slope") — the

@@ -2,16 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-review tool: dumps `explain("formatted")` for every registered
   * query so scan pushdown (PushedFilters/ReadSchema), join strategies
   * (BroadcastHashJoin vs SortMergeJoin), TakeOrderedAndProject, and
   * WholeStageCodegen spans can be audited per round.
   *
   * Usage: sbt "runMain graft.Explain [sfDir] [outFile] [filter]"
-  * (optional third arg: comma-separated name substrings, the
-  * SPARK_GRAFT_BENCH_QUERIES convention — local plan iteration aid)
+  * (optional third arg: comma-separated name substrings chosen by
+  * `Bench.select`, the rule every harness main shares — local plan
+  * iteration aid)
   *
   * NOTE (ADVICE r15): queries built on eager checkpoints — q183's
   * localCheckpoint basket build — execute REAL Spark jobs during
@@ -23,9 +22,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("/tmp/plans.txt")
-    val nameFilter = args.lift(2)
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
+    val filter = args.lift(2).map(Bench.tokens).getOrElse(Nil)
+    val names = Bench.select(filter)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     // GraftSession registers the extensions — without them the custom
     // AsOfJoin node (q74) has no planner strategy and explain fails
@@ -35,12 +33,10 @@ object Explain {
     // a filtered dump must say so in-band: a canonical PLANS_r<N>.txt
     // silently replaced by a subset would read as "plan coverage
     // shrank" (the Bench subset-masquerade hazard, same fix)
-    nameFilter.foreach(f =>
-      sb.append(s"== FILTERED PLAN DUMP (filter=${f.mkString(",")}) — " +
-        "NOT a full artifact ==\n"))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => nameFilter.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
+    if (filter.nonEmpty)
+      sb.append(s"== FILTERED PLAN DUMP (filter=${filter.mkString(",")}) — " +
+        "NOT a full artifact ==\n")
+    names.foreach { case (name, fn) =>
       sb.append(s"\n${"=" * 78}\n== $name\n${"=" * 78}\n")
       try {
         val df = fn(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
 
 /** Per-query empirical profiler (optimization guide §1.1): the sandbox
   * runs with `spark.ui.enabled=false`, so this listener-based harness
@@ -11,16 +10,18 @@ import org.apache.spark.sql.DataFrame
   * read/write bytes, input bytes and records — enough to decide whether
   * a query's time is scan, shuffle, or many-small-jobs overhead.
   *
+  * Queries are chosen by `Bench.select` and each run is one
+  * `Bench.runNoop`, the selection and timing every harness main shares.
+  *
   * Usage: sbt "runMain graft.QProfile <sfDir> <name1,name2,...>"
   */
 object QProfile {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: QProfile <sfDir> <name1,...>")
     val sfDir = args(0)
-    val wanted = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted.exists(n.contains) }
-    require(names.nonEmpty, s"no query matches ${wanted.mkString(",")}")
+    val wanted = Bench.tokens(args(1))
+    require(wanted.nonEmpty, "usage: QProfile <sfDir> <name1,...>")
+    val names = Bench.select(wanted)
 
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
@@ -65,17 +66,11 @@ object QProfile {
         }
     })
 
-    def runOnce(fn: (org.apache.spark.sql.SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
     names.foreach { case (n, fn) =>
-      runOnce(fn) // warm-up (JIT, codegen cache, parquet footers)
+      Bench.runNoop(spark, sfDir, fn) // warm-up (JIT, codegen cache, parquet footers)
       lock.synchronized { stages.clear(); jobs.clear(); jobStages.clear() }
       collecting = true
-      val wall = runOnce(fn)
+      val wall = Bench.runNoop(spark, sfDir, fn)
       // drain: wait (bounded) until every started job has its end event,
       // then one settle interval for trailing stage-completed events
       val deadline = System.nanoTime() + 5_000_000_000L

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,38 +6,25 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [filter] — the optional third arg restricts
     // the dump to query names matching ANY comma-separated substring
-    // (same convention as SPARK_GRAFT_BENCH_QUERIES; local iteration
-    // aid — the driver always calls with exactly two args = full dump).
+    // (`Bench.select`, the rule every harness main shares; local
+    // iteration aid — the driver always calls with exactly two args =
+    // full dump). An empty/comma-only filter arg dumps every query.
     val (sfDir, outDir) = (args(0), args(1))
-    // an empty/comma-only filter arg means "no filter" (dump all), not
-    // "match nothing" — Some(Seq()) would silently dump zero queries
-    val nameFilter = args.lift(2)
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
+    val names = Bench.select(args.lift(2).map(Bench.tokens).getOrElse(Nil))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => nameFilter.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    names.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    }
+    // every control char is escaped: a tab or CR in builder-authored SQL
+    // would otherwise make the driver's json.load fail and silently zero
+    // the round's correctness
+    def q(s: String): String = "\"" + Bench.esc(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

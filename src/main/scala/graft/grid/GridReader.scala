@@ -32,15 +32,20 @@ final case class RadiationPoint(
   */
 object GridReader {
 
-  /** Explode every grid file under `inDir` into typed points. */
-  def readGrids(spark: SparkSession, inDir: String): Dataset[RadiationPoint] = {
+  /** (file_name, whole text) per file under `inDir`. */
+  private def wholeFiles(spark: SparkSession, inDir: String): Dataset[(String, String)] = {
     import spark.implicits._
     spark.read
       .option("wholetext", "true")
       .text(inDir)
       .select(input_file_name().as("file_name"), col("value"))
       .as[(String, String)]
-      .flatMap { case (name, text) => explodeFile(name, text) }
+  }
+
+  /** Explode every grid file under `inDir` into typed points. */
+  def readGrids(spark: SparkSession, inDir: String): Dataset[RadiationPoint] = {
+    import spark.implicits._
+    wholeFiles(spark, inDir).flatMap { case (name, text) => explodeFile(name, text) }
   }
 
   /** Batch ingest with the streaming path's fault tolerance: corrupt
@@ -52,11 +57,7 @@ object GridReader {
       spark: SparkSession,
       inDir: String): (Dataset[RadiationPoint], Dataset[(String, String)]) = {
     import spark.implicits._
-    val parsed = spark.read
-      .option("wholetext", "true")
-      .text(inDir)
-      .select(input_file_name().as("file_name"), col("value"))
-      .as[(String, String)]
+    val parsed = wholeFiles(spark, inDir)
       .map { case (name, text) =>
         scala.util.Try(explodeFile(name, text).toSeq) match {
           case scala.util.Success(pts) => (name, pts, null: String)
@@ -102,14 +103,9 @@ object GridReader {
     */
   def pointsPerFile(spark: SparkSession, inDir: String): Dataset[(String, Seq[RadiationPoint])] = {
     import spark.implicits._
-    spark.read
-      .option("wholetext", "true")
-      .text(inDir)
-      .select(input_file_name().as("file_name"), col("value"))
-      .as[(String, String)]
-      .map { case (name, text) =>
-        (AscGrid.parseFileName(name).baseName, explodeFile(name, text).toSeq)
-      }
+    wholeFiles(spark, inDir).map { case (name, text) =>
+      (AscGrid.parseFileName(name).baseName, explodeFile(name, text).toSeq)
+    }
   }
 
   /** Pure per-file transform — shared by the batch and streaming paths

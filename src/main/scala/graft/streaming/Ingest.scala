@@ -71,20 +71,8 @@ object Ingest {
       maxAttempts: Int = DefaultMaxAttempts,
       parse: (String, String) => Seq[RadiationPoint] =
         (name, text) => GridReader.explodeFile(name, text).toSeq): StreamingQuery = {
-    val raw = spark.readStream
-      .option("wholetext", "true")
-      .option("cleanSource", "archive")
-      .option("sourceArchiveDir", archiveDir)
-      .text(inDir)
-      .select(input_file_name().as("file_name"), col("value"))
-
-    val query = raw.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, servingDir, quarantineDir, inDir, maxAttempts, parse)
-      }
-      .start()
+    val query = start(spark, inDir, servingDir, checkpointDir, archiveDir,
+      quarantineDir, maxAttempts, parse, Trigger.AvailableNow(), None)
     query.awaitTermination()
     query
   }
@@ -119,15 +107,33 @@ object Ingest {
       maxFilesPerTrigger: Int = 4,
       parse: (String, String) => Seq[RadiationPoint] =
         (name, text) => GridReader.explodeFile(name, text).toSeq): StreamingQuery = {
-    val raw = spark.readStream
+    start(spark, inDir, servingDir, checkpointDir, archiveDir, quarantineDir,
+      maxAttempts, parse, Trigger.ProcessingTime(intervalMs), Some(maxFilesPerTrigger))
+  }
+
+  /** The one source + sink both postures share: whole-text grid files
+    * archived after commit, every micro-batch routed by [[processBatch]].
+    */
+  private def start(
+      spark: SparkSession,
+      inDir: String,
+      servingDir: String,
+      checkpointDir: String,
+      archiveDir: String,
+      quarantineDir: String,
+      maxAttempts: Int,
+      parse: (String, String) => Seq[RadiationPoint],
+      trigger: Trigger,
+      maxFilesPerTrigger: Option[Int]): StreamingQuery = {
+    val reader = spark.readStream
       .option("wholetext", "true")
       .option("cleanSource", "archive")
       .option("sourceArchiveDir", archiveDir)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+    maxFilesPerTrigger.fold(reader)(reader.option("maxFilesPerTrigger", _))
       .text(inDir)
       .select(input_file_name().as("file_name"), col("value"))
-    raw.writeStream
-      .trigger(Trigger.ProcessingTime(intervalMs))
+      .writeStream
+      .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         processBatch(batch, servingDir, quarantineDir, inDir, maxAttempts, parse)
