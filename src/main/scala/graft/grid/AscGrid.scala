@@ -81,7 +81,7 @@ object AscGrid {
     */
   private def headerValue(line: String, lineNo: Int): String = {
     val toks = line.trim.split("\\s+")
-    require(toks.length >= 2, s"malformed header line $lineNo: '$line'")
+    require(toks.length >= 2, s"malformed header line $lineNo: '${quote(line)}'")
     toks(1)
   }
 
@@ -100,6 +100,10 @@ object AscGrid {
     val values = dataLines.map(parseRow(_, ncols)).toVector
     AscGrid(ncols, nrows, xll, yll, cell, nodata, values)
   }
+
+  /** A bad line as errors quote it: at most 120 chars, as errors reach the driver. */
+  private[grid] def quote(line: String): String =
+    if (line.length <= 120) line else line.take(120) + "…"
 
   @inline private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\r'
@@ -125,17 +129,17 @@ object AscGrid {
           i += 1
         }
         if (i == start)
-          throw new NumberFormatException(s"bad cell token at col $idx in '$line'")
+          throw new NumberFormatException(s"bad cell token at col $idx in '${quote(line)}'")
         if (i < len && !isWs(line.charAt(i)))
           throw new NumberFormatException(
-            s"non-integer cell '${line.substring(start - (if (neg) 1 else 0), math.min(i + 4, len))}' in '$line'")
+            s"non-integer cell '${line.substring(start - (if (neg) 1 else 0), math.min(i + 4, len))}' in '${quote(line)}'")
         out(idx) = if (neg) -v else v
         idx += 1
       }
     }
     while (i < len && isWs(line.charAt(i))) i += 1
     require(idx == ncols && i >= len,
-      s"expected $ncols cells, got ${if (i < len) "more" else idx.toString} in '$line'")
+      s"expected $ncols cells, got ${if (i < len) "more" else idx.toString} in '${quote(line)}'")
     out
   }
 

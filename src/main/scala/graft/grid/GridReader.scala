@@ -57,19 +57,18 @@ object GridReader {
       spark: SparkSession,
       inDir: String): (Dataset[RadiationPoint], Dataset[(String, String)]) = {
     import spark.implicits._
-    val parsed = wholeFiles(spark, inDir)
-      .map { case (name, text) =>
-        scala.util.Try(explodeFile(name, text).toSeq) match {
-          case scala.util.Success(pts) => (name, pts, null: String)
-          case scala.util.Failure(e) =>
-            (name, Seq.empty[RadiationPoint],
-              s"${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      }
-      .cache() // both returned branches filter this — avoid a double parse
-    (parsed.filter(_._3 == null).flatMap(_._2),
-      parsed.filter(_._3 != null).map(t => (t._1, t._3)))
+    val files = wholeFiles(spark, inDir)
+    (files.flatMap { case (name, text) => tryExplode(name, text).getOrElse(Iterator.empty) },
+      files.flatMap { case (name, text) => tryExplode(name, text).left.toOption.map(name -> _) })
   }
+
+  /** [[explodeFile]] or its [[errorText]]; a bad file fails here, as the parse is eager. */
+  private def tryExplode(name: String, text: String): Either[String, Iterator[RadiationPoint]] =
+    scala.util.Try(explodeFile(name, text)).toEither.left.map(errorText)
+
+  /** How a failed file's error is recorded: `<exception class>: <message>`. */
+  private[graft] def errorText(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${e.getMessage}"
 
   /** Byte-exact O1 semantics: the reference decodes with
     * `decode('utf-8', 'ignore')` (`bom/bom.py:58`) — undecodable bytes are

@@ -3,9 +3,13 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
+import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog, FileStreamSourceOffset, SerializedOffset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -135,23 +139,33 @@ object Ingest {
       .writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, servingDir, quarantineDir, inDir, maxAttempts, parse)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        processBatch(batch, batchId, checkpointDir, servingDir, quarantineDir, inDir,
+          maxAttempts, parse)
       }
       .start()
   }
 
-  /** Per-batch routing: good files → serving table; failed files →
-    * re-enqueue (attempt < maxAttempts) or quarantine (attempt ==
-    * maxAttempts). File TEXT never rides to the driver: retry files are
-    * written EXECUTOR-SIDE (a poisoned batch of large corrupt files
-    * stays distributed — the driver sees only names and error strings),
-    * and the quarantine record is a distributed JSON append. inDir is
-    * executor-visible by construction — the file source's read tasks
-    * already run there.
+  /** One point of a good file, or the one row of a failed file. */
+  private[streaming] final case class Routed(
+      point: RadiationPoint, path: String, attempt: Int, err: String)
+
+  /** Per-batch routing in a single pass with no cache: each file is parsed
+    * once, inside the job that appends the good files' points to the
+    * serving table. A failed file yields one `(path, attempt, error)` row
+    * instead, and an `Observation` on that same job collects those rows,
+    * so the driver receives only names, attempts and error strings — never
+    * file text or points. A clean batch is one job. A failed file with
+    * attempts left is re-enqueued EXECUTOR-SIDE from a second, unparsed
+    * read of the batch filtered to the failed paths (a poisoned batch of
+    * large corrupt files stays distributed); an exhausted one is appended
+    * to the quarantine as JSON. inDir is executor-visible by construction
+    * — the file source's read tasks already run there.
     */
   private[streaming] def processBatch(
       batch: DataFrame,
+      batchId: Long,
+      checkpointDir: String,
       servingDir: String,
       quarantineDir: String,
       inDir: String,
@@ -159,35 +173,52 @@ object Ingest {
       parse: (String, String) => Seq[RadiationPoint]): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val parsed = batch.as[(String, String)].map { case (name, text) =>
-      val (attempt, logical) = attemptOf(name)
+    // the file scan drops zero-byte files, so they join as empty text
+    val files = batch.as[(String, String)]
+      .union(emptyFiles(spark, checkpointDir, batchId).map(_ -> "").toDS())
+    val failures = Observation("ingest_failures")
+    val routed = files.flatMap { case (path, text) =>
+      val (attempt, logical) = attemptOf(path)
       // parse under the ORIGINAL name so filename-metadata extraction is
       // attempt-invariant
       Try(parse(logical, text)) match {
-        case Success(pts) => (logical, attempt, pts, null: String, null: String)
-        case Failure(e) =>
-          (logical, attempt, Seq.empty[RadiationPoint],
-            s"${e.getClass.getSimpleName}: ${e.getMessage}", text)
+        case Success(pts) => pts.iterator.map(Routed(_, null, attempt, null))
+        case Failure(e) => Iterator(Routed(null, path, attempt, GridReader.errorText(e)))
       }
-    }.cache()
-    try {
-      val good = parsed.filter(_._4 == null).flatMap(_._3)
-      GridReader.writePartitioned(good, servingDir)
-      parsed.filter(r => r._4 != null && r._2 < maxAttempts)
-        .foreachPartition {
-          (it: Iterator[(String, Int, Seq[RadiationPoint], String, String)]) =>
-            it.foreach { case (logical, attempt, _, _, text) =>
-              reenqueue(inDir, s"retry${attempt + 1}__$logical", text)
-            }
-        }
-      val exhausted = parsed.filter(r => r._4 != null && r._2 >= maxAttempts)
-      if (!exhausted.isEmpty) {
-        exhausted
-          .map { case (logical, attempt, _, err, _) => (logical, err, attempt.toLong) }
-          .toDF("file_name", "error", "attempts")
-          .write.mode(SaveMode.Append).json(quarantineDir)
+    }.observe(failures, collect_list(
+      when($"err".isNotNull, struct($"path", $"attempt", $"err"))).as("failed"))
+    GridReader.writePartitioned(
+      routed.filter($"err".isNull).select($"point.*").as[RadiationPoint], servingDir)
+    // the metrics arrive on the listener bus just after the write returns;
+    // the bound turns a never-reported observation into a failed batch
+    val (retry, exhausted) = Await.result(failures.future, 2.minutes)
+      .getSeq[Row](0).map(r => (r.getString(0), r.getInt(1), r.getString(2)))
+      .partition(_._2 < maxAttempts)
+    if (retry.nonEmpty)
+      files.filter($"file_name".isin(retry.map(_._1): _*)).foreachPartition {
+        (it: Iterator[(String, String)]) =>
+          it.foreach { case (path, text) =>
+            val (attempt, logical) = attemptOf(path)
+            reenqueue(inDir, s"retry${attempt + 1}__$logical", text)
+          }
       }
-    } finally parsed.unpersist()
+    if (exhausted.nonEmpty)
+      exhausted.map { case (path, attempt, err) => (attemptOf(path)._2, err, attempt.toLong) }
+        .toDF("file_name", "error", "attempts")
+        .write.mode(SaveMode.Append).json(quarantineDir)
+  }
+
+  /** The zero-byte files of micro-batch `batchId`: the checkpoint's offset
+    * log bounds the batch's range of file-source log ids, and that log
+    * names the batch's files.
+    */
+  private def emptyFiles(spark: SparkSession, checkpointDir: String, batchId: Long): Seq[String] = {
+    def end(id: Long): Long = new OffsetSeqLog(spark, s"$checkpointDir/offsets").get(id)
+      .flatMap(_.offsets.head).fold(-1L)(o => FileStreamSourceOffset(SerializedOffset(o.json)).logOffset)
+    val hadoop = spark.sessionState.newHadoopConf()
+    new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark, s"$checkpointDir/sources/0")
+      .get(Some(end(batchId - 1) + 1), Some(end(batchId))).toSeq.flatMap(_._2.map(_.sparkPath.toPath))
+      .filter(p => p.getFileSystem(hadoop).getFileStatus(p).getLen == 0).map(_.toString)
   }
 
   /** Atomically materialize a re-enqueued retry file in `inDir`.

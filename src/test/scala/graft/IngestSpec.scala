@@ -273,6 +273,61 @@ class IngestSpec extends AnyFunSuite {
     assert(!after.exists(f => f.startsWith("retry3__") ||
       f.startsWith(".retrytmp_")), after.toString)
   }
+
+  test("a clean drain parses each file once and caches nothing") {
+    val in = tmp("single-pass-in"); writeFixtures(in)
+    val serving = tmp("single-pass-serving").toString
+    // any RDD persisted during the drain shows in a submitted stage
+    val cachedStages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.storageLevel.isValid))
+          cachedStages.incrementAndGet()
+    }
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    IngestFlaky.calls.set(0)
+    val counting: (String, String) => Seq[graft.grid.RadiationPoint] =
+      (name, text) => {
+        IngestFlaky.calls.incrementAndGet()
+        GridReader.explodeFile(name, text).toSeq
+      }
+    spark.sparkContext.addSparkListener(listener)
+    try Ingest.runAvailableNow(spark, in.toString, serving,
+      tmp("single-pass-chk").toString, tmp("single-pass-archive").toString,
+      tmp("single-pass-quarantine").toString, parse = counting)
+    finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.read.parquet(serving).count() == 14)
+    assert(IngestFlaky.calls.get() == GridFixtures.files.size)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    assert(cachedStages.get() == 0)
+  }
+
+  test("one drain of a good, an all-NODATA and a zero-byte file") {
+    val in = tmp("edge-in")
+    Files.writeString(in.resolve(GridFixtures.f1.name), GridFixtures.f1.content)
+    Files.writeString(in.resolve("IDZ00026_radiation_20180102_0100.txt"),
+      "ncols 2\nnrows 1\nxllcorner 112.0\nyllcorner -44.0\ncellsize 0.5\n" +
+        "NODATA_value -999\n-999 -999")
+    val empty = "EMPTY_radiation_20180103_0100.txt"
+    Files.write(in.resolve(empty), Array.emptyByteArray)
+    val serving = tmp("edge-serving").toString
+    val quarantine = tmp("edge-quarantine")
+
+    // a bounded wait: an observation that is never reported must fail the
+    // drain, not hang it
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    Await.result(Future(Ingest.runAvailableNow(spark, in.toString, serving,
+      tmp("edge-chk").toString, tmp("edge-archive").toString,
+      quarantine.toString)), 3.minutes)
+
+    assert(spark.read.parquet(serving).count() == 8) // f1; the NODATA grid adds 0
+    assert(Files.exists(in.resolve(s"retry2__$empty")))
+    assert(Files.size(in.resolve(s"retry2__$empty")) == 0L)
+    assert(Option(quarantine.toFile.list()).forall(_.isEmpty))
+  }
 }
 
 /** Shared fault-injection counter: a top-level object so the executor-side
