@@ -63,7 +63,9 @@ object Ingest {
     * the drain.
     *
     * `parse` is injectable for fault-injection tests; production callers
-    * use the default grid parser.
+    * use the default grid parser. It must throw EAGERLY for a bad file: an
+    * iterator that throws while it is consumed fails the task instead of
+    * routing the file to redrive.
     */
   def runAvailableNow(
       spark: SparkSession,
@@ -73,8 +75,7 @@ object Ingest {
       archiveDir: String,
       quarantineDir: String,
       maxAttempts: Int = DefaultMaxAttempts,
-      parse: (String, String) => Seq[RadiationPoint] =
-        (name, text) => GridReader.explodeFile(name, text).toSeq): StreamingQuery = {
+      parse: (String, String) => IterableOnce[RadiationPoint] = GridReader.explodeFile): StreamingQuery = {
     val query = start(spark, inDir, servingDir, checkpointDir, archiveDir,
       quarantineDir, maxAttempts, parse, Trigger.AvailableNow(), None)
     query.awaitTermination()
@@ -97,7 +98,8 @@ object Ingest {
     * kill; between micro-batches (and across graceful stop/restart) the
     * checkpoint makes processing exactly-once. The reference has the
     * identical window (bom/bom.py processes, then deletes the SQS
-    * message), so parity is by design, not accident.
+    * message), so parity is by design, not accident. `parse` has the
+    * eager-failure contract of [[runAvailableNow]].
     */
   def runProcessingTime(
       spark: SparkSession,
@@ -109,8 +111,7 @@ object Ingest {
       maxAttempts: Int = DefaultMaxAttempts,
       intervalMs: Long = 500L,
       maxFilesPerTrigger: Int = 4,
-      parse: (String, String) => Seq[RadiationPoint] =
-        (name, text) => GridReader.explodeFile(name, text).toSeq): StreamingQuery = {
+      parse: (String, String) => IterableOnce[RadiationPoint] = GridReader.explodeFile): StreamingQuery = {
     start(spark, inDir, servingDir, checkpointDir, archiveDir, quarantineDir,
       maxAttempts, parse, Trigger.ProcessingTime(intervalMs), Some(maxFilesPerTrigger))
   }
@@ -126,7 +127,7 @@ object Ingest {
       archiveDir: String,
       quarantineDir: String,
       maxAttempts: Int,
-      parse: (String, String) => Seq[RadiationPoint],
+      parse: (String, String) => IterableOnce[RadiationPoint],
       trigger: Trigger,
       maxFilesPerTrigger: Option[Int]): StreamingQuery = {
     val reader = spark.readStream
@@ -146,21 +147,27 @@ object Ingest {
       .start()
   }
 
-  /** One point of a good file, or the one row of a failed file. */
-  private[streaming] final case class Routed(
-      point: RadiationPoint, path: String, attempt: Int, err: String)
+  /** Open partition writers per serving-write task; each buffers a row group. */
+  private[graft] val MaxOpenWriters = 4
 
-  /** Per-batch routing in a single pass with no cache: each file is parsed
-    * once, inside the job that appends the good files' points to the
-    * serving table. A failed file yields one `(path, attempt, error)` row
-    * instead, and an `Observation` on that same job collects those rows,
-    * so the driver receives only names, attempts and error strings — never
-    * file text or points. A clean batch is one job. A failed file with
-    * attempts left is re-enqueued EXECUTOR-SIDE from a second, unparsed
-    * read of the batch filtered to the failed paths (a poisoned batch of
-    * large corrupt files stays distributed); an exhausted one is appended
-    * to the quarantine as JSON. inDir is executor-visible by construction
-    * — the file source's read tasks already run there.
+  /** A good file's point (the 9 serving columns) or a failed file's row, flat. */
+  private[streaming] final case class Routed(date: String, radiation_type: String,
+      longitude: Double, latitude: Double, radiation: Int, year: Int, month: Int,
+      day: Int, hour: Int, path: String, attempt: Int, err: String)
+
+  /** Per-batch routing in one pass, with no cache and no sort: each file is
+    * parsed once, inside the job that appends the good files' points to the
+    * serving table, and its points stream as flat rows into the open parquet
+    * writer of the file's one partition. A writer limit makes Spark plan no
+    * per-task sort; past [[MaxOpenWriters]] partitions in one task the writer
+    * sorts the rest itself. The limit goes on the micro-batch's session, the
+    * stream's private clone, so no write of the caller's session changes.
+    * A failed file yields one `(path, attempt, err)` row, which an
+    * `Observation` on the same job brings to the driver — never text or
+    * points. A clean batch is one job. A failed file with attempts left is
+    * re-enqueued EXECUTOR-SIDE from a second, unparsed read of the batch
+    * filtered to the failed paths; an exhausted one is appended to the
+    * quarantine as JSON. inDir is executor-visible: the read tasks run there.
     */
   private[streaming] def processBatch(
       batch: DataFrame,
@@ -170,7 +177,7 @@ object Ingest {
       quarantineDir: String,
       inDir: String,
       maxAttempts: Int,
-      parse: (String, String) => Seq[RadiationPoint]): Unit = {
+      parse: (String, String) => IterableOnce[RadiationPoint]): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     // the file scan drops zero-byte files, so they join as empty text
@@ -179,16 +186,18 @@ object Ingest {
     val failures = Observation("ingest_failures")
     val routed = files.flatMap { case (path, text) =>
       val (attempt, logical) = attemptOf(path)
-      // parse under the ORIGINAL name so filename-metadata extraction is
-      // attempt-invariant
+      // parse under the ORIGINAL name: filename metadata is attempt-invariant
       Try(parse(logical, text)) match {
-        case Success(pts) => pts.iterator.map(Routed(_, null, attempt, null))
-        case Failure(e) => Iterator(Routed(null, path, attempt, GridReader.errorText(e)))
+        case Success(pts) => pts.iterator.map(p => Routed(p.date, p.radiation_type,
+          p.longitude, p.latitude, p.radiation, p.year, p.month, p.day, p.hour, null, attempt, null))
+        case Failure(e) =>
+          Iterator(Routed(null, null, 0, 0, 0, 0, 0, 0, 0, path, attempt, GridReader.errorText(e)))
       }
-    }.observe(failures, collect_list(
-      when($"err".isNotNull, struct($"path", $"attempt", $"err"))).as("failed"))
+    }.observe(failures,
+      collect_list(expr("if(err IS NULL, NULL, struct(path, attempt, err))")).as("failed"))
+    spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", MaxOpenWriters)
     GridReader.writePartitioned(
-      routed.filter($"err".isNull).select($"point.*").as[RadiationPoint], servingDir)
+      routed.filter($"err".isNull).drop("path", "attempt", "err").as[RadiationPoint], servingDir)
     // the metrics arrive on the listener bus just after the write returns;
     // the bound turns a never-reported observation into a failed batch
     val (retry, exhausted) = Await.result(failures.future, 2.minutes)

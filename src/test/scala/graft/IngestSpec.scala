@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -327,6 +329,104 @@ class IngestSpec extends AnyFunSuite {
     assert(Files.exists(in.resolve(s"retry2__$empty")))
     assert(Files.size(in.resolve(s"retry2__$empty")) == 0L)
     assert(Option(quarantine.toFile.list()).forall(_.isEmpty))
+  }
+
+  test("a clean drain plans no sort in the serving-table write") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val in = tmp("no-sort-in"); writeFixtures(in)
+    val serving = tmp("no-sort-serving").toString
+    // the executed plan of every partitioned file write the drain runs
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.executedPlan.foreach {
+          case w: DataWritingCommandExec => w.cmd match {
+            case c: InsertIntoHadoopFsRelationCommand if c.partitionColumns.nonEmpty =>
+              writes.add(if (w.exists(_.isInstanceOf[SortExec])) s"sorted:\n$w" else "unsorted")
+            case _ =>
+          }
+          case _ =>
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the stream's session is cloned at start, so it inherits the listener
+    spark.listenerManager.register(listener)
+    try Ingest.runAvailableNow(spark, in.toString, serving,
+      tmp("no-sort-chk").toString, tmp("no-sort-archive").toString,
+      tmp("no-sort-quarantine").toString)
+    finally spark.listenerManager.unregister(listener)
+    // listeners are told on the listener bus, after the write returns
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(spark.read.parquet(serving).count() == 14)
+    assert(!writes.isEmpty, "no serving-table write was reported")
+    writes.forEach(w => assert(w == "unsorted", w))
+  }
+
+  test("more partitions in one write task than the writer limit: every row lands") {
+    val in = tmp("fallback-in")
+    // one tiny grid per UTC hour, each its own Sydney-local hour partition
+    val hours = 1 to Ingest.MaxOpenWriters + 2
+    hours.foreach { h =>
+      Files.writeString(in.resolve(f"IDZ00026_radiation_20180105_$h%02d00.txt"),
+        s"ncols 2\nnrows 1\nxllcorner 112.0\nyllcorner -44.0\ncellsize 0.5\n" +
+          s"NODATA_value -999\n$h ${10 * h}")
+    }
+    val serving = tmp("fallback-serving")
+    // (tasks, rows written) of every stage the drain runs
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo.numTasks -> e.stageInfo.taskMetrics.outputMetrics.recordsWritten)
+    }
+    // one split may then span every file; the stream's session inherits it
+    val packKey = "spark.sql.files.minPartitionNum"
+    val prev = spark.conf.getOption(packKey)
+    spark.conf.set(packKey, "1")
+    spark.sparkContext.addSparkListener(listener)
+    try Ingest.runAvailableNow(spark, in.toString, serving.toString,
+      tmp("fallback-chk").toString, tmp("fallback-archive").toString,
+      tmp("fallback-quarantine").toString)
+    finally {
+      spark.sparkContext.removeSparkListener(listener)
+      prev.fold(spark.conf.unset(packKey))(spark.conf.set(packKey, _))
+    }
+    val back = spark.read.parquet(serving.toString)
+    assert(back.count() == 2L * hours.size)
+    assert(back.selectExpr("sum(radiation)").head.getLong(0) == 11L * hours.sum)
+    // one read task held every file and wrote every row
+    assert(stages.toArray.toSeq.contains(1 -> 2L * hours.size), stages.toString)
+    val dirs = Files.walk(serving).iterator.asScala.filter(Files.isDirectory(_))
+      .map(serving.relativize(_).toString).filter(_.count(_ == '/') == 3).toSet
+    assert(dirs == hours.map(h => s"year=2018/month=1/day=5/hour=${h + 11}").toSet)
+  }
+
+  test("a drain leaves the caller's writer-limit setting as it was") {
+    val key = "spark.sql.maxConcurrentOutputFileWriters"
+    val before = spark.conf.getOption(key)
+    val in = tmp("conf-in"); writeFixtures(in)
+    val serving = tmp("conf-serving").toString
+    Ingest.runAvailableNow(spark, in.toString, serving, tmp("conf-chk").toString,
+      tmp("conf-archive").toString, tmp("conf-quarantine").toString)
+    assert(spark.read.parquet(serving).count() == 14)
+    assert(spark.conf.getOption(key) == before)
+
+    val in2 = tmp("conf-pt-in")
+    Files.writeString(in2.resolve(GridFixtures.f1.name), GridFixtures.f1.content)
+    val serving2 = tmp("conf-pt-serving").toString
+    val q = Ingest.runProcessingTime(spark, in2.toString, serving2,
+      tmp("conf-pt-chk").toString, tmp("conf-pt-archive").toString,
+      tmp("conf-pt-quarantine").toString, intervalMs = 150L)
+    try {
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      def served(): Long = scala.util.Try(spark.read.parquet(serving2).count()).getOrElse(0L)
+      while (served() != 8 && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(served() == 8)
+    } finally q.stop()
+    assert(spark.conf.getOption(key) == before)
   }
 }
 
