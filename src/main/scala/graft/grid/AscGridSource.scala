@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -15,22 +16,20 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** First-class DataSource V2 for ESRI ASCII grids:
   * `spark.read.format("ascgrid").load(dir)` → the [[RadiationPoint]]
   * schema (VERDICT r15 item 4 — the engine-flavored source the
   * reference's own domain deserves; the wholetext+flatMap path in
   * [[GridReader]] stays for the typed-Dataset API and the streaming
-  * ingest).
+  * ingest; all three decode through [[GridReader.pointRows]]).
   *
   * What the format adds over wholetext+flatMap:
   *
   *  - **Schema declared once** (no Dataset encoder round-trip), visible
   *    to Catalyst before any file is opened.
   *  - **Column pruning** pushed into the reader: a `radiation`-only
-  *    projection never materializes the date/partition strings per cell
-  *    (at ~612k cells/file the per-cell string work IS the scan cost).
+  *    projection reads 1-column rows, with no date or type string.
   *  - **Partition-aware file listing**: the filename metadata
   *    (radiation_type/year/month/day/hour — the reference's partition
   *    scheme, `bom/bom.py:28-32,94-107`) is parsed at PLANNING time and
@@ -63,17 +62,14 @@ class AscGridSource extends TableProvider with DataSourceRegister {
 }
 
 object AscGridSource {
-  /** `load(p)` passes a single `path`; `load(p1, p2, ...)` a JSON-ish
-    * `paths` array. Handle both (the DSv2 options contract).
+  /** `load(p)` passes a single `path`; `load(p1, p2, ...)` a `paths` JSON
+    * array, written by Jackson and read back the same way, as Spark's
+    * `FileDataSourceV2` does, so commas and escapes inside a path survive.
     */
   private[grid] def paths(props: util.Map[String, String]): Seq[String] = {
     val single = Option(props.get("path")).toSeq
-    val multi = Option(props.get("paths")).toSeq.flatMap { js =>
-      // minimal JSON string-array parse (values are paths, no escapes
-      // expected from DataFrameReader)
-      js.stripPrefix("[").stripSuffix("]").split(",")
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-    }
+    val multi = Option(props.get("paths")).toSeq
+      .flatMap(js => new ObjectMapper().readValue(js, classOf[Array[String]]))
     val all = single ++ multi
     require(all.nonEmpty, "ascgrid: no path specified — use .load(<dir>)")
     all
@@ -98,6 +94,10 @@ object AscGridTable {
     */
   val MetaCols: Set[String] =
     Set("date", "radiation_type", "year", "month", "day", "hour")
+
+  /** The largest grid file the reader takes: it is read whole into one byte
+    * array, and the JDK's soft limit on an array's length is this. */
+  val MaxFileBytes: Long = Int.MaxValue - 8
 }
 
 class AscGridTable(paths: Seq[String]) extends Table with SupportsRead {
@@ -259,10 +259,8 @@ class AscGridReaderFactory(required: StructType, confMap: Map[String, String])
       partition.asInstanceOf[AscGridFilePartition].path, required, confMap)
 }
 
-/** Reads ONE grid file: whole-file bytes → lossy decode → parse →
-  * per-cell rows carrying only the pruned columns. The per-file
-  * constants (date string, type, partition ints) are computed once per
-  * file, not per cell.
+/** Reads ONE grid file: whole-file bytes → lossy decode →
+  * [[GridReader.pointRows]] carrying only the pruned columns.
   */
 class AscGridPartitionReader(path: String, required: StructType,
     confMap: Map[String, String]) extends PartitionReader[InternalRow] {
@@ -272,35 +270,13 @@ class AscGridPartitionReader(path: String, required: StructType,
     confMap.foreach { case (k, v) => conf.set(k, v) }
     val hp = new Path(path)
     val fs = hp.getFileSystem(conf)
-    val len = fs.getFileStatus(hp).getLen.toInt
-    val bytes = new Array[Byte](len)
+    val len = fs.getFileStatus(hp).getLen
+    require(len <= AscGridTable.MaxFileBytes, s"ascgrid: $path is $len bytes; " +
+      s"a grid file is read whole, so at most ${AscGridTable.MaxFileBytes} bytes")
+    val bytes = new Array[Byte](len.toInt)
     val in = fs.open(hp)
     try in.readFully(0, bytes) finally in.close()
-
-    val meta = AscGrid.parseFileName(path)
-    val grid = AscGrid.parse(GridReader.decodeLossy(bytes))
-    // bind column extractors once per file — the per-cell loop only
-    // fills the varying lon/lat/radiation slots
-    val date = UTF8String.fromString(meta.localDateTime)
-    val rtype = UTF8String.fromString(meta.radiationType)
-    val getters: Array[GridPoint => Any] = required.fields.map { f =>
-      f.name match {
-        case "date" => (_: GridPoint) => date
-        case "radiation_type" => (_: GridPoint) => rtype
-        case "longitude" => (p: GridPoint) => p.longitude
-        case "latitude" => (p: GridPoint) => p.latitude
-        case "radiation" => (p: GridPoint) => p.radiation
-        case "year" => (_: GridPoint) => meta.year
-        case "month" => (_: GridPoint) => meta.month
-        case "day" => (_: GridPoint) => meta.day
-        case "hour" => (_: GridPoint) => meta.hour
-        case other => throw new IllegalArgumentException(
-          s"ascgrid: unknown column $other")
-      }
-    }
-    grid.explode.map { p =>
-      InternalRow.fromSeq(getters.map(g => g(p)).toSeq)
-    }
+    GridReader.pointRows(path, GridReader.decodeLossy(bytes), required.fieldNames.toSeq)
   }
 
   private var current: InternalRow = _

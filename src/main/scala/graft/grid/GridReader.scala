@@ -1,7 +1,12 @@
 package graft.grid
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.unsafe.types.UTF8String
 
 /** One output row of the radiation ETL (serving-table schema, FIXTURES.md
   * F4). `date` is the Sydney-local rendering `yyyy-MM-dd HH:mm` (constant
@@ -43,10 +48,15 @@ object GridReader {
   }
 
   /** Explode every grid file under `inDir` into typed points. */
-  def readGrids(spark: SparkSession, inDir: String): Dataset[RadiationPoint] = {
-    import spark.implicits._
-    wholeFiles(spark, inDir).flatMap { case (name, text) => explodeFile(name, text) }
-  }
+  def readGrids(spark: SparkSession, inDir: String): Dataset[RadiationPoint] =
+    points(spark, wholeFiles(spark, inDir).queryExecution.toRdd
+      .flatMap(f => pointRows(f.getString(0), f.getString(1))))
+
+  /** [[pointRows]] output as points, typed by [[RadiationPoint]]'s schema
+    * (strings optional, numbers required) with no encoder on the rows. */
+  private[graft] def points(spark: SparkSession, rows: RDD[InternalRow]): Dataset[RadiationPoint] =
+    DatasetBridge.ofInternalRows(spark, rows, Encoders.product[RadiationPoint].schema)
+      .as(Encoders.product[RadiationPoint])
 
   /** Batch ingest with the streaming path's fault tolerance: corrupt
     * files are returned separately instead of failing the job (batch
@@ -107,8 +117,8 @@ object GridReader {
     }
   }
 
-  /** Pure per-file transform — shared by the batch and streaming paths
-    * and directly unit-testable.
+  /** Pure per-file transform to typed points: the object reference path
+    * that [[pointRows]] is tested against, and directly unit-testable.
     */
   def explodeFile(fileName: String, wholeText: String): Iterator[RadiationPoint] = {
     val meta = AscGrid.parseFileName(fileName)
@@ -123,6 +133,59 @@ object GridReader {
         month = meta.month,
         day = meta.day,
         hour = meta.hour)
+    }
+  }
+
+  /** One file's points as Catalyst rows, the one row decoder of the ingest
+    * write, the `ascgrid` source and [[readGrids]]: the cells of
+    * [[AscGrid.explode]], in its order and arithmetic, carrying `columns`
+    * in that order. The name and the grid are parsed EAGERLY, so a bad file
+    * throws from this call, never from the iterator. Every `next()` returns
+    * the SAME reused `UnsafeRow`: the per-file constants are written once,
+    * and each cell only sets `longitude`, `latitude` and `radiation` in
+    * place. A consumer that buffers rows must `copy()` them.
+    */
+  def pointRows(
+      fileName: String,
+      text: String,
+      columns: Seq[String] = AscGridTable.Schema.fieldNames.toSeq): Iterator[InternalRow] = {
+    val meta = AscGrid.parseFileName(fileName)
+    val g = AscGrid.parse(text)
+    val w = new UnsafeRowWriter(columns.size, 64)
+    w.resetRowWriter()
+    w.zeroOutNullBytes()
+    columns.zipWithIndex.foreach {
+      case ("date", i) => w.write(i, UTF8String.fromString(meta.localDateTime))
+      case ("radiation_type", i) => w.write(i, UTF8String.fromString(meta.radiationType))
+      case ("year", i) => w.write(i, meta.year)
+      case ("month", i) => w.write(i, meta.month)
+      case ("day", i) => w.write(i, meta.day)
+      case ("hour", i) => w.write(i, meta.hour)
+      case ("longitude" | "latitude" | "radiation", _) =>
+      case (other, _) => throw new IllegalArgumentException(s"unknown grid column $other")
+    }
+    val row = w.getRow
+    val (lon, lat, rad) =
+      (columns.indexOf("longitude"), columns.indexOf("latitude"), columns.indexOf("radiation"))
+    new Iterator[InternalRow] {
+      private var r, c = 0 // the next cell to look at; r reaches nrows at the end
+      private var cells = if (g.nrows > 0) g.values(0) else null // row r's cells
+
+      override def hasNext: Boolean = {
+        while (r < g.nrows && (c == g.ncols || cells(c) == g.nodata))
+          if (c < g.ncols) c += 1
+          else { r += 1; c = 0; if (r < g.nrows) cells = g.values(r) }
+        r < g.nrows
+      }
+
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException("no grid cell left")
+        if (lon >= 0) row.setDouble(lon, g.xllcorner + c * g.cellsize)
+        if (lat >= 0) row.setDouble(lat, g.yllcorner + (g.nrows - 1 - r) * g.cellsize)
+        if (rad >= 0) row.setInt(rad, cells(c))
+        c += 1
+        row
+      }
     }
   }
 

@@ -3,17 +3,17 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
-import scala.util.{Failure, Success, Try}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog, FileStreamSourceOffset, SerializedOffset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.grid.{GridReader, RadiationPoint}
+import graft.grid.GridReader
 
 /** Event-driven ingest (reference EP1, SURVEY.md §3): the S3
   * `ObjectCreated` → Lambda choreography becomes a Structured Streaming
@@ -63,7 +63,7 @@ object Ingest {
     * the drain.
     *
     * `parse` is injectable for fault-injection tests; production callers
-    * use the default grid parser. It must throw EAGERLY for a bad file: an
+    * use [[GridReader.pointRows]]. It must throw EAGERLY for a bad file: an
     * iterator that throws while it is consumed fails the task instead of
     * routing the file to redrive.
     */
@@ -75,7 +75,7 @@ object Ingest {
       archiveDir: String,
       quarantineDir: String,
       maxAttempts: Int = DefaultMaxAttempts,
-      parse: (String, String) => IterableOnce[RadiationPoint] = GridReader.explodeFile): StreamingQuery = {
+      parse: (String, String) => Iterator[InternalRow] = GridReader.pointRows(_, _)): StreamingQuery = {
     val query = start(spark, inDir, servingDir, checkpointDir, archiveDir,
       quarantineDir, maxAttempts, parse, Trigger.AvailableNow(), None)
     query.awaitTermination()
@@ -111,7 +111,7 @@ object Ingest {
       maxAttempts: Int = DefaultMaxAttempts,
       intervalMs: Long = 500L,
       maxFilesPerTrigger: Int = 4,
-      parse: (String, String) => IterableOnce[RadiationPoint] = GridReader.explodeFile): StreamingQuery = {
+      parse: (String, String) => Iterator[InternalRow] = GridReader.pointRows(_, _)): StreamingQuery = {
     start(spark, inDir, servingDir, checkpointDir, archiveDir, quarantineDir,
       maxAttempts, parse, Trigger.ProcessingTime(intervalMs), Some(maxFilesPerTrigger))
   }
@@ -127,7 +127,7 @@ object Ingest {
       archiveDir: String,
       quarantineDir: String,
       maxAttempts: Int,
-      parse: (String, String) => IterableOnce[RadiationPoint],
+      parse: (String, String) => Iterator[InternalRow],
       trigger: Trigger,
       maxFilesPerTrigger: Option[Int]): StreamingQuery = {
     val reader = spark.readStream
@@ -150,24 +150,21 @@ object Ingest {
   /** Open partition writers per serving-write task; each buffers a row group. */
   private[graft] val MaxOpenWriters = 4
 
-  /** A good file's point (the 9 serving columns) or a failed file's row, flat. */
-  private[streaming] final case class Routed(date: String, radiation_type: String,
-      longitude: Double, latitude: Double, radiation: Int, year: Int, month: Int,
-      day: Int, hour: Int, path: String, attempt: Int, err: String)
-
   /** Per-batch routing in one pass, with no cache and no sort: each file is
-    * parsed once, inside the job that appends the good files' points to the
-    * serving table, and its points stream as flat rows into the open parquet
-    * writer of the file's one partition. A writer limit makes Spark plan no
-    * per-task sort; past [[MaxOpenWriters]] partitions in one task the writer
-    * sorts the rest itself. The limit goes on the micro-batch's session, the
-    * stream's private clone, so no write of the caller's session changes.
-    * A failed file yields one `(path, attempt, err)` row, which an
-    * `Observation` on the same job brings to the driver — never text or
-    * points. A clean batch is one job. A failed file with attempts left is
-    * re-enqueued EXECUTOR-SIDE from a second, unparsed read of the batch
-    * filtered to the failed paths; an exhausted one is appended to the
-    * quarantine as JSON. inDir is executor-visible: the read tasks run there.
+    * decoded once, inside the job that appends the good files' points to the
+    * serving table, straight into Catalyst rows that stream into the open
+    * parquet writer of the file's one partition. A writer limit makes Spark
+    * plan no per-task sort; past [[MaxOpenWriters]] partitions in one task
+    * the writer sorts the rest itself. The limit goes on the micro-batch's
+    * session, the stream's private clone, so no write of the caller's
+    * session changes. A failed file adds one `(path, attempt, err)` to an
+    * accumulator, read on the driver once the write returns — never text or
+    * points; a write only merges its successful tasks' updates, and a
+    * re-run stage may add a file twice, hence `distinct`. A clean batch is
+    * one job. A failed file with attempts left is re-enqueued EXECUTOR-SIDE
+    * from a second, unparsed read of the batch filtered to the failed paths;
+    * an exhausted one is appended to the quarantine as JSON. inDir is
+    * executor-visible: the read tasks run there.
     */
   private[streaming] def processBatch(
       batch: DataFrame,
@@ -177,32 +174,25 @@ object Ingest {
       quarantineDir: String,
       inDir: String,
       maxAttempts: Int,
-      parse: (String, String) => IterableOnce[RadiationPoint]): Unit = {
+      parse: (String, String) => Iterator[InternalRow]): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     // the file scan drops zero-byte files, so they join as empty text
     val files = batch.as[(String, String)]
       .union(emptyFiles(spark, checkpointDir, batchId).map(_ -> "").toDS())
-    val failures = Observation("ingest_failures")
-    val routed = files.flatMap { case (path, text) =>
+    val failures = spark.sparkContext.collectionAccumulator[(String, Int, String)]
+    val points = files.queryExecution.toRdd.flatMap { f =>
+      val path = f.getString(0)
       val (attempt, logical) = attemptOf(path)
       // parse under the ORIGINAL name: filename metadata is attempt-invariant
-      Try(parse(logical, text)) match {
-        case Success(pts) => pts.iterator.map(p => Routed(p.date, p.radiation_type,
-          p.longitude, p.latitude, p.radiation, p.year, p.month, p.day, p.hour, null, attempt, null))
-        case Failure(e) =>
-          Iterator(Routed(null, null, 0, 0, 0, 0, 0, 0, 0, path, attempt, GridReader.errorText(e)))
+      try parse(logical, f.getString(1)) catch { case NonFatal(e) =>
+        failures.add((path, attempt, GridReader.errorText(e)))
+        Iterator.empty
       }
-    }.observe(failures,
-      collect_list(expr("if(err IS NULL, NULL, struct(path, attempt, err))")).as("failed"))
+    }
     spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", MaxOpenWriters)
-    GridReader.writePartitioned(
-      routed.filter($"err".isNull).drop("path", "attempt", "err").as[RadiationPoint], servingDir)
-    // the metrics arrive on the listener bus just after the write returns;
-    // the bound turns a never-reported observation into a failed batch
-    val (retry, exhausted) = Await.result(failures.future, 2.minutes)
-      .getSeq[Row](0).map(r => (r.getString(0), r.getInt(1), r.getString(2)))
-      .partition(_._2 < maxAttempts)
+    GridReader.writePartitioned(GridReader.points(spark, points), servingDir)
+    val (retry, exhausted) = failures.value.asScala.toSeq.distinct.partition(_._2 < maxAttempts)
     if (retry.nonEmpty)
       files.filter($"file_name".isin(retry.map(_._1): _*)).foreachPartition {
         (it: Iterator[(String, String)]) =>

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.grid.{AscGridScan, GridFixtures, GridReader}
+import graft.grid.{AscGridPartitionReader, AscGridScan, AscGridTable, GridFixtures, GridReader}
 
 /** The DSv2 `ascgrid` format (VERDICT r15 item 4): row-identical to the
   * wholetext+flatMap path, with schema-first planning, column pruning
@@ -87,5 +87,33 @@ class AscGridSourceSpec extends AnyFunSuite {
     val viaFlatMap = GridReader.readGridsLossy(spark, dir.toString)
       .toDF().filter(col("hour") === 12).collect().map(_.toSeq).toSet
     assert(viaFormat == viaFlatMap)
+  }
+
+  test("a multi-path load keeps commas in a path: Jackson-written paths " +
+    "are read back as JSON") {
+    val root = Files.createTempDirectory("ascgrid_multi")
+    val (first, second) = GridFixtures.files.splitAt(2)
+    val commaDir = Files.createDirectory(root.resolve("a,b"))
+    val plainDir = Files.createDirectory(root.resolve("c"))
+    first.foreach(f => Files.writeString(commaDir.resolve(f.name), f.content))
+    second.foreach(f => Files.writeString(plainDir.resolve(f.name), f.content))
+    val df = spark.read.format("ascgrid").load(commaDir.toString, plainDir.toString)
+    assert(scanOf(df).plannedFiles.size == GridFixtures.files.size)
+    assert(df.collect().map(_.toSeq).toSet ==
+      spark.read.format("ascgrid").load(dir.toString).collect().map(_.toSeq).toSet)
+  }
+
+  test("a grid file of 2 GiB or more fails by name instead of wrapping its length") {
+    val d = Files.createTempDirectory("ascgrid_huge")
+    val huge = d.resolve("IDZ00026_radiation_20180101_0100.txt")
+    // sparse: the length is set, no byte is written
+    val raf = new java.io.RandomAccessFile(huge.toFile, "rw")
+    try raf.setLength(3L << 30) finally raf.close()
+    try {
+      val reader = new AscGridPartitionReader(huge.toString, AscGridTable.Schema, Map.empty)
+      val e = intercept[IllegalArgumentException](reader.next())
+      assert(e.getMessage.contains(huge.toString), e.getMessage)
+      assert(e.getMessage.contains(AscGridTable.MaxFileBytes.toString), e.getMessage)
+    } finally Files.delete(huge)
   }
 }

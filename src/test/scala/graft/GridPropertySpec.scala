@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.grid.AscGrid
+import graft.grid.{AscGrid, GridFixtures, GridReader, RadiationPoint}
 
 /** Property tests (SURVEY.md §5.2): random grids → render → parse →
   * explode, checking the structural invariants of the raster→points
@@ -107,5 +108,46 @@ class GridPropertySpec extends AnyFunSuite {
       val coords = pts.map(p => (p.longitude, p.latitude))
       assert(coords.distinct.size == coords.size)
     }
+  }
+
+  private val Columns = Seq("date", "radiation_type", "longitude", "latitude",
+    "radiation", "year", "month", "day", "hour")
+
+  /** A decoded row's `cols`, with doubles as their exact bits. */
+  private def fieldsOf(row: InternalRow, cols: Seq[String]): Seq[Any] =
+    cols.zipWithIndex.map {
+      case ("date" | "radiation_type", i) => row.getUTF8String(i).toString
+      case ("longitude" | "latitude", i) => java.lang.Double.doubleToRawLongBits(row.getDouble(i))
+      case (_, i) => row.getInt(i)
+    }
+
+  private def fieldsOf(p: RadiationPoint, cols: Seq[String]): Seq[Any] = {
+    val byName = p.productElementNames.zip(p.productIterator).toMap
+    cols.map(byName(_) match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    })
+  }
+
+  test("pointRows decodes exactly what explodeFile does, for any column " +
+    "subset, and throws for a malformed grid from the call") {
+    val name = "IDZ00026_radiation_20180101_0100.txt"
+    def check(name: String, text: String): Unit = {
+      val want = GridReader.explodeFile(name, text).toVector
+      Seq(Columns, Seq("latitude", "date", "radiation"), Seq("hour"), Nil).foreach { cols =>
+        // the decoder reuses one row, so each is copied as it is taken
+        val got = GridReader.pointRows(name, text, cols).map(_.copy()).toVector
+        assert(got.map(fieldsOf(_, cols)) == want.map(fieldsOf(_, cols)), s"$name $cols")
+      }
+    }
+    forAll(gridGen)(raw => check(name, raw.render))
+    GridFixtures.files.foreach(f => check(f.name, f.content))
+
+    // eager: a malformed grid throws from the call itself, not from next()
+    val header = "ncols 2\nnrows 1\nxllcorner 112.0\nyllcorner -44.0\ncellsize 0.5\nNODATA_value -999\n"
+    intercept[IllegalArgumentException](GridReader.pointRows(name, "ncols 2\nnrows 1"))
+    intercept[NumberFormatException](GridReader.pointRows(name, header + "1 x"))
+    intercept[IllegalArgumentException](GridReader.pointRows(name, header + "1 2 3"))
+    intercept[IllegalArgumentException](GridReader.pointRows("not_a_grid.txt", header + "1 2"))
   }
 }

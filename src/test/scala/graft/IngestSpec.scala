@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.grid.{GridFixtures, GridReader}
@@ -115,11 +116,11 @@ class IngestSpec extends AnyFunSuite {
 
     IngestFlaky.calls.set(0)
     // fails the first 2 parse attempts, then behaves — a transient fault
-    val flaky: (String, String) => Seq[graft.grid.RadiationPoint] =
+    val flaky: (String, String) => Iterator[InternalRow] =
       (name, text) => {
         if (IngestFlaky.calls.getAndIncrement() < 2)
           sys.error("transient downstream failure")
-        GridReader.explodeFile(name, text).toSeq
+        GridReader.pointRows(name, text)
       }
 
     (1 to 3).foreach { _ =>
@@ -289,10 +290,10 @@ class IngestSpec extends AnyFunSuite {
     }
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
     IngestFlaky.calls.set(0)
-    val counting: (String, String) => Seq[graft.grid.RadiationPoint] =
+    val counting: (String, String) => Iterator[InternalRow] =
       (name, text) => {
         IngestFlaky.calls.incrementAndGet()
-        GridReader.explodeFile(name, text).toSeq
+        GridReader.pointRows(name, text)
       }
     spark.sparkContext.addSparkListener(listener)
     try Ingest.runAvailableNow(spark, in.toString, serving,
@@ -332,18 +333,24 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("a clean drain plans no sort in the serving-table write") {
-    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SerializeFromObjectExec, SortExec}
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     val in = tmp("no-sort-in"); writeFixtures(in)
     val serving = tmp("no-sort-serving").toString
     // the executed plan of every partitioned file write the drain runs
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // those that build a point object or collect metrics per row
+    val perPoint = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         qe.executedPlan.foreach {
           case w: DataWritingCommandExec => w.cmd match {
             case c: InsertIntoHadoopFsRelationCommand if c.partitionColumns.nonEmpty =>
+              // points reach the writer as Catalyst rows, with no per-row
+              // routing (added first: the wait below ends on `writes`)
+              if (w.exists(p => p.isInstanceOf[SerializeFromObjectExec] ||
+                  p.isInstanceOf[CollectMetricsExec])) perPoint.add(w.toString)
               writes.add(if (w.exists(_.isInstanceOf[SortExec])) s"sorted:\n$w" else "unsorted")
             case _ =>
           }
@@ -363,6 +370,7 @@ class IngestSpec extends AnyFunSuite {
     assert(spark.read.parquet(serving).count() == 14)
     assert(!writes.isEmpty, "no serving-table write was reported")
     writes.forEach(w => assert(w == "unsorted", w))
+    assert(perPoint.isEmpty, perPoint.toString)
   }
 
   test("more partitions in one write task than the writer limit: every row lands") {
