@@ -3,11 +3,12 @@ package graft.grid
 import java.util
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -20,11 +21,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** First-class DataSource V2 for ESRI ASCII grids:
   * `spark.read.format("ascgrid").load(dir)` → the [[RadiationPoint]]
   * schema (VERDICT r15 item 4 — the engine-flavored source the
-  * reference's own domain deserves; the wholetext+flatMap path in
-  * [[GridReader]] stays for the typed-Dataset API and the streaming
-  * ingest; all three decode through [[GridReader.pointRows]]).
+  * reference's own domain deserves). It is the batch reader:
+  * [[GridReader.readGrids]] is this format typed as points, and it and the
+  * streaming ingest both decode through [[GridReader.pointRows]].
   *
-  * What the format adds over wholetext+flatMap:
+  * What the format adds over a whole-file read + flatMap:
   *
   *  - **Schema declared once** (no Dataset encoder round-trip), visible
   *    to Catalyst before any file is opened.
@@ -44,8 +45,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    parallelizes across files, not within them.
   *
   * Byte contract: content is decoded with [[GridReader.decodeLossy]]
-  * (the reference's `decode('utf-8','ignore')`, `bom/bom.py:58`) — the
-  * format is row-identical to [[GridReader.readGridsLossy]].
+  * (the reference's `decode('utf-8','ignore')`, `bom/bom.py:58`), as the
+  * streaming ingest does. A file that fails to decode, a zero-byte one
+  * included, fails the read with its path.
   */
 class AscGridSource extends TableProvider with DataSourceRegister {
 
@@ -77,17 +79,9 @@ object AscGridSource {
 }
 
 object AscGridTable {
-  /** The serving schema, declared once ([[RadiationPoint]]). */
-  val Schema: StructType = StructType(Seq(
-    StructField("date", StringType, nullable = false),
-    StructField("radiation_type", StringType, nullable = false),
-    StructField("longitude", DoubleType, nullable = false),
-    StructField("latitude", DoubleType, nullable = false),
-    StructField("radiation", IntegerType, nullable = false),
-    StructField("year", IntegerType, nullable = false),
-    StructField("month", IntegerType, nullable = false),
-    StructField("day", IntegerType, nullable = false),
-    StructField("hour", IntegerType, nullable = false)))
+  /** The serving schema, declared once by [[RadiationPoint]]: strings
+    * optional, numbers required, as the serving parquet footers record. */
+  val Schema: StructType = Encoders.product[RadiationPoint].schema
 
   /** The columns derivable from the file NAME alone — prunable at
     * planning time without opening the file.
@@ -260,7 +254,8 @@ class AscGridReaderFactory(required: StructType, confMap: Map[String, String])
 }
 
 /** Reads ONE grid file: whole-file bytes → lossy decode →
-  * [[GridReader.pointRows]] carrying only the pruned columns.
+  * [[GridReader.pointRows]] carrying only the pruned columns. A failed
+  * decode is rethrown naming the path, with the failure as its cause.
   */
 class AscGridPartitionReader(path: String, required: StructType,
     confMap: Map[String, String]) extends PartitionReader[InternalRow] {
@@ -276,7 +271,10 @@ class AscGridPartitionReader(path: String, required: StructType,
     val bytes = new Array[Byte](len.toInt)
     val in = fs.open(hp)
     try in.readFully(0, bytes) finally in.close()
-    GridReader.pointRows(path, GridReader.decodeLossy(bytes), required.fieldNames.toSeq)
+    try GridReader.pointRows(path, GridReader.decodeLossy(bytes), required.fieldNames.toSeq)
+    catch { case NonFatal(e) =>
+      throw new IllegalArgumentException(s"ascgrid: $path: ${GridReader.errorText(e)}", e)
+    }
   }
 
   private var current: InternalRow = _

@@ -28,34 +28,33 @@ final case class RadiationPoint(
 /** Batch ingest layer: directory of ESRI ASCII grids → typed
   * `Dataset[RadiationPoint]` → Hive-partitioned parquet.
   *
-  * Files are read whole (`wholetext`) because the 6 header lines are
-  * positional (SURVEY.md §7.4): the unit of parallelism is the FILE,
-  * matching the reference's 1-file-1-lambda fan-out
-  * (`cloudformation/lambda.cfn.yaml:127`). BOM grids are ≈886×691 ints —
-  * far below executor memory — so per-file flatMap is safe at any corpus
-  * size; 100 TB of grids parallelizes across files, not within them.
+  * Files are read whole because the 6 header lines are positional
+  * (SURVEY.md §7.4): the unit of parallelism is the FILE, matching the
+  * reference's 1-file-1-lambda fan-out (`cloudformation/lambda.cfn.yaml:127`).
+  * BOM grids are ≈886×691 ints — far below executor memory — so per-file
+  * decoding is safe at any corpus size; 100 TB of grids parallelizes across
+  * files, not within them. Every path reads raw bytes and decodes them with
+  * [[decodeLossy]], the reference's one byte contract.
   */
 object GridReader {
 
-  /** (file_name, whole text) per file under `inDir`. */
+  /** (path, lossily decoded text) per file under `inDir`. */
   private def wholeFiles(spark: SparkSession, inDir: String): Dataset[(String, String)] = {
     import spark.implicits._
-    spark.read
-      .option("wholetext", "true")
-      .text(inDir)
-      .select(input_file_name().as("file_name"), col("value"))
-      .as[(String, String)]
+    spark.read.format("binaryFile").load(inDir)
+      .select("path", "content").as[(String, Array[Byte])]
+      .map { case (path, bytes) => (path, decodeLossy(bytes)) }
   }
 
-  /** Explode every grid file under `inDir` into typed points. */
+  /** Explode every grid file under `inDir` into typed points: the `ascgrid`
+    * source, so a zero-byte or malformed file fails the read by name. */
   def readGrids(spark: SparkSession, inDir: String): Dataset[RadiationPoint] =
-    points(spark, wholeFiles(spark, inDir).queryExecution.toRdd
-      .flatMap(f => pointRows(f.getString(0), f.getString(1))))
+    spark.read.format("ascgrid").load(inDir).as(Encoders.product[RadiationPoint])
 
-  /** [[pointRows]] output as points, typed by [[RadiationPoint]]'s schema
-    * (strings optional, numbers required) with no encoder on the rows. */
+  /** [[pointRows]] output as points, typed by the serving schema with no
+    * encoder on the rows. */
   private[graft] def points(spark: SparkSession, rows: RDD[InternalRow]): Dataset[RadiationPoint] =
-    DatasetBridge.ofInternalRows(spark, rows, Encoders.product[RadiationPoint].schema)
+    DatasetBridge.ofInternalRows(spark, rows, AscGridTable.Schema)
       .as(Encoders.product[RadiationPoint])
 
   /** Batch ingest with the streaming path's fault tolerance: corrupt
@@ -80,25 +79,9 @@ object GridReader {
   private[graft] def errorText(e: Throwable): String =
     s"${e.getClass.getSimpleName}: ${e.getMessage}"
 
-  /** Byte-exact O1 semantics: the reference decodes with
-    * `decode('utf-8', 'ignore')` (`bom/bom.py:58`) — undecodable bytes are
-    * silently DROPPED, not replaced. Spark's text source substitutes
-    * U+FFFD instead, so this path reads raw bytes (`binaryFile` source)
-    * and applies a java.nio CharsetDecoder with IGNORE actions.
-    */
-  def readGridsLossy(spark: SparkSession, inDir: String): Dataset[RadiationPoint] = {
-    import spark.implicits._
-    spark.read
-      .format("binaryFile")
-      .load(inDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (name, bytes) =>
-        explodeFile(name, decodeLossy(bytes))
-      }
-  }
-
-  /** Python `bytes.decode('utf-8', 'ignore')` equivalent. */
+  /** Python `bytes.decode('utf-8', 'ignore')` equivalent, the reference's
+    * decode (`bom/bom.py:58`): undecodable bytes are DROPPED, where Spark's
+    * text source would substitute U+FFFD. */
   def decodeLossy(bytes: Array[Byte]): String = {
     import java.nio.charset.{CodingErrorAction, StandardCharsets}
     val dec = StandardCharsets.UTF_8.newDecoder()
@@ -137,7 +120,7 @@ object GridReader {
   }
 
   /** One file's points as Catalyst rows, the one row decoder of the ingest
-    * write, the `ascgrid` source and [[readGrids]]: the cells of
+    * write and the `ascgrid` source (so of [[readGrids]]): the cells of
     * [[AscGrid.explode]], in its order and arithmetic, carrying `columns`
     * in that order. The name and the grid are parsed EAGERLY, so a bad file
     * throws from this call, never from the iterator. Every `next()` returns

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
@@ -8,9 +7,9 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog, FileStreamSourceOffset, SerializedOffset}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.grid.GridReader
@@ -62,8 +61,10 @@ object Ingest {
     * the quarantine dir (path + error + attempts as JSON). Returns after
     * the drain.
     *
-    * `parse` is injectable for fault-injection tests; production callers
-    * use [[GridReader.pointRows]]. It must throw EAGERLY for a bad file: an
+    * `parse` gets each file's original name and its text as
+    * [[GridReader.decodeLossy]] decodes it. It is injectable for
+    * fault-injection tests; production callers use
+    * [[GridReader.pointRows]]. It must throw EAGERLY for a bad file: an
     * iterator that throws while it is consumed fails the task instead of
     * routing the file to redrive.
     */
@@ -116,8 +117,9 @@ object Ingest {
       maxAttempts, parse, Trigger.ProcessingTime(intervalMs), Some(maxFilesPerTrigger))
   }
 
-  /** The one source + sink both postures share: whole-text grid files
-    * archived after commit, every micro-batch routed by [[processBatch]].
+  /** The one source + sink both postures share: whole grid files as bytes
+    * (`path`, `content`), archived after commit, every micro-batch routed by
+    * [[processBatch]].
     */
   private def start(
       spark: SparkSession,
@@ -130,13 +132,12 @@ object Ingest {
       parse: (String, String) => Iterator[InternalRow],
       trigger: Trigger,
       maxFilesPerTrigger: Option[Int]): StreamingQuery = {
-    val reader = spark.readStream
-      .option("wholetext", "true")
+    val reader = spark.readStream.format("binaryFile").schema(BinaryFileFormat.schema)
       .option("cleanSource", "archive")
       .option("sourceArchiveDir", archiveDir)
     maxFilesPerTrigger.fold(reader)(reader.option("maxFilesPerTrigger", _))
-      .text(inDir)
-      .select(input_file_name().as("file_name"), col("value"))
+      .load(inDir)
+      .select("path", "content")
       .writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
@@ -150,8 +151,9 @@ object Ingest {
   /** Open partition writers per serving-write task; each buffers a row group. */
   private[graft] val MaxOpenWriters = 4
 
-  /** Per-batch routing in one pass, with no cache and no sort: each file is
-    * decoded once, inside the job that appends the good files' points to the
+  /** Per-batch routing in one pass, with no cache and no sort: each file's
+    * bytes are decoded once with [[GridReader.decodeLossy]], as the reference
+    * does, inside the job that appends the good files' points to the
     * serving table, straight into Catalyst rows that stream into the open
     * parquet writer of the file's one partition. A writer limit makes Spark
     * plan no per-task sort; past [[MaxOpenWriters]] partitions in one task
@@ -161,8 +163,9 @@ object Ingest {
     * accumulator, read on the driver once the write returns — never text or
     * points; a write only merges its successful tasks' updates, and a
     * re-run stage may add a file twice, hence `distinct`. A clean batch is
-    * one job. A failed file with attempts left is re-enqueued EXECUTOR-SIDE
-    * from a second, unparsed read of the batch filtered to the failed paths;
+    * one job. A failed file with attempts left is re-enqueued EXECUTOR-SIDE,
+    * with its original bytes, from a second, unparsed read of the batch
+    * filtered to the failed paths;
     * an exhausted one is appended to the quarantine as JSON. inDir is
     * executor-visible: the read tasks run there.
     */
@@ -177,15 +180,15 @@ object Ingest {
       parse: (String, String) => Iterator[InternalRow]): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    // the file scan drops zero-byte files, so they join as empty text
-    val files = batch.as[(String, String)]
-      .union(emptyFiles(spark, checkpointDir, batchId).map(_ -> "").toDS())
+    // the file scan drops zero-byte files, so they join as empty content
+    val files = batch.as[(String, Array[Byte])]
+      .union(emptyFiles(spark, checkpointDir, batchId).map(_ -> Array.emptyByteArray).toDS())
     val failures = spark.sparkContext.collectionAccumulator[(String, Int, String)]
     val points = files.queryExecution.toRdd.flatMap { f =>
       val path = f.getString(0)
       val (attempt, logical) = attemptOf(path)
       // parse under the ORIGINAL name: filename metadata is attempt-invariant
-      try parse(logical, f.getString(1)) catch { case NonFatal(e) =>
+      try parse(logical, GridReader.decodeLossy(f.getBinary(1))) catch { case NonFatal(e) =>
         failures.add((path, attempt, GridReader.errorText(e)))
         Iterator.empty
       }
@@ -194,11 +197,11 @@ object Ingest {
     GridReader.writePartitioned(GridReader.points(spark, points), servingDir)
     val (retry, exhausted) = failures.value.asScala.toSeq.distinct.partition(_._2 < maxAttempts)
     if (retry.nonEmpty)
-      files.filter($"file_name".isin(retry.map(_._1): _*)).foreachPartition {
-        (it: Iterator[(String, String)]) =>
-          it.foreach { case (path, text) =>
+      files.filter($"path".isin(retry.map(_._1): _*)).foreachPartition {
+        (it: Iterator[(String, Array[Byte])]) =>
+          it.foreach { case (path, bytes) =>
             val (attempt, logical) = attemptOf(path)
-            reenqueue(inDir, s"retry${attempt + 1}__$logical", text)
+            reenqueue(inDir, s"retry${attempt + 1}__$logical", bytes)
           }
       }
     if (exhausted.nonEmpty)
@@ -220,13 +223,14 @@ object Ingest {
       .filter(p => p.getFileSystem(hadoop).getFileStatus(p).getLen == 0).map(_.toString)
   }
 
-  /** Atomically materialize a re-enqueued retry file in `inDir`.
+  /** Atomically materialize a re-enqueued retry file in `inDir`, holding
+    * exactly the original file's bytes.
     *
     * The always-on [[runProcessingTime]] source lists `inDir` every
-    * ~500 ms; a plain create+write can be LISTED half-written, and with
-    * `wholetext` the torn prefix either parses as silently truncated
-    * data or fails and is re-enqueued with the truncated text as the
-    * new payload — permanently corrupting the retry chain. So: write to
+    * ~500 ms; a plain create+write can be LISTED half-written, and the
+    * torn prefix either parses as silently truncated data or fails and
+    * is re-enqueued with the truncated bytes as the new payload —
+    * permanently corrupting the retry chain. So: write to
     * a `.`-prefixed sibling in the same directory (Spark's file sources
     * filter hidden paths, so the temp can never be listed) and rename
     * it in with ATOMIC_MOVE — same-directory rename is atomic on POSIX
@@ -236,10 +240,10 @@ object Ingest {
     * PUT-if-absent of the final key.
     */
   private[graft] def reenqueue(
-      inDir: String, name: String, text: String): Unit = {
+      inDir: String, name: String, bytes: Array[Byte]): Unit = {
     val tmp = Paths.get(inDir,
       s".retrytmp_${java.util.UUID.randomUUID().toString.take(8)}_$name")
-    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, bytes)
     Files.move(tmp, Paths.get(inDir, name),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }

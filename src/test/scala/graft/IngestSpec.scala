@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
@@ -231,7 +232,7 @@ class IngestSpec extends AnyFunSuite {
   test("reenqueue materializes atomically: exact bytes, no temp leftovers") {
     val dir = tmp("reenq")
     val text = "0 1 2 3\n" * 4096 // ~32 KiB, multi-block on most FS
-    Ingest.reenqueue(dir.toString, "retry2__f.txt", text)
+    Ingest.reenqueue(dir.toString, "retry2__f.txt", text.getBytes(UTF_8))
     assert(Files.readString(dir.resolve("retry2__f.txt")) == text)
     // the staging temp is gone — ATOMIC_MOVE consumed it; a leftover
     // would mean a torn create+write path is back
@@ -330,6 +331,40 @@ class IngestSpec extends AnyFunSuite {
     assert(Files.exists(in.resolve(s"retry2__$empty")))
     assert(Files.size(in.resolve(s"retry2__$empty")) == 0L)
     assert(Option(quarantine.toFile.list()).forall(_.isEmpty))
+  }
+
+  test("a stray byte inside a cell is dropped, as the reference decodes: " +
+    "the grid is served, never retried or quarantined") {
+    val in = tmp("stray-in")
+    val clean = GridFixtures.f1.content.getBytes(UTF_8)
+    val at = GridFixtures.f1.content.indexOf("\n12 15 ") + "\n12 1".length
+    Files.write(in.resolve(GridFixtures.f1.name),
+      clean.take(at) ++ Array(0xfe.toByte) ++ clean.drop(at))
+    val serving = tmp("stray-serving").toString
+    val quarantine = tmp("stray-quarantine")
+    Ingest.runAvailableNow(spark, in.toString, serving, tmp("stray-chk").toString,
+      tmp("stray-archive").toString, quarantine.toString)
+
+    val f1 = GridReader.explodeFile(GridFixtures.f1.name, GridFixtures.f1.content).toSeq
+    val back = spark.read.parquet(serving)
+    assert(back.count() == 8 && f1.size == 8)
+    assert(back.selectExpr("sum(radiation)").head.getLong(0) == f1.map(_.radiation).sum)
+    assert(!Option(in.toFile.list()).toSeq.flatten.exists(_.startsWith("retry2__")))
+    assert(Option(quarantine.toFile.list()).forall(_.isEmpty))
+  }
+
+  test("a retried file holds exactly the original bytes, invalid UTF-8 included") {
+    val in = tmp("retry-bytes-in")
+    val lines = GridFixtures.f1.content.split("\n", -1)
+    val original = Array.concat("ncols ".getBytes(UTF_8), Array(0xff.toByte),
+      lines.tail.mkString("\n", "\n", "").getBytes(UTF_8))
+    Files.write(in.resolve(GridFixtures.f1.name), original)
+    Ingest.runAvailableNow(spark, in.toString, tmp("retry-bytes-serving").toString,
+      tmp("retry-bytes-chk").toString, tmp("retry-bytes-archive").toString,
+      tmp("retry-bytes-quarantine").toString)
+    val retried = Files.readAllBytes(in.resolve(s"retry2__${GridFixtures.f1.name}"))
+    assert(retried.sameElements(original),
+      s"retry bytes differ: ${retried.take(8).map(b => f"${b & 0xff}%02X").mkString(" ")}")
   }
 
   test("a clean drain plans no sort in the serving-table write") {
