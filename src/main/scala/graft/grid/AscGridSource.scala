@@ -22,8 +22,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `spark.read.format("ascgrid").load(dir)` → the [[RadiationPoint]]
   * schema (VERDICT r15 item 4 — the engine-flavored source the
   * reference's own domain deserves). It is the batch reader:
-  * [[GridReader.readGrids]] is this format typed as points, and it and the
-  * streaming ingest both decode through [[GridReader.pointRows]].
+  * [[GridReader.readGrids]] is this format typed as points, decoded through
+  * [[GridReader.pointRows]].
   *
   * What the format adds over a whole-file read + flatMap:
   *

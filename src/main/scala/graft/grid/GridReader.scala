@@ -1,11 +1,9 @@
 package graft.grid
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One output row of the radiation ETL (serving-table schema, FIXTURES.md
@@ -51,12 +49,6 @@ object GridReader {
   def readGrids(spark: SparkSession, inDir: String): Dataset[RadiationPoint] =
     spark.read.format("ascgrid").load(inDir).as(Encoders.product[RadiationPoint])
 
-  /** [[pointRows]] output as points, typed by the serving schema with no
-    * encoder on the rows. */
-  private[graft] def points(spark: SparkSession, rows: RDD[InternalRow]): Dataset[RadiationPoint] =
-    DatasetBridge.ofInternalRows(spark, rows, AscGridTable.Schema)
-      .as(Encoders.product[RadiationPoint])
-
   /** Batch ingest with the streaming path's fault tolerance: corrupt
     * files are returned separately instead of failing the job (batch
     * analogue of the quarantine sink). Returns (points, badFiles) where
@@ -100,12 +92,16 @@ object GridReader {
     }
   }
 
+  /** A grid file's name and text, both parsed EAGERLY: a bad file throws here. */
+  def parseFile(fileName: String, text: String): (GridFileMeta, AscGrid) =
+    (AscGrid.parseFileName(fileName), AscGrid.parse(text))
+
   /** Pure per-file transform to typed points: the object reference path
     * that [[pointRows]] is tested against, and directly unit-testable.
     */
   def explodeFile(fileName: String, wholeText: String): Iterator[RadiationPoint] = {
-    val meta = AscGrid.parseFileName(fileName)
-    AscGrid.parse(wholeText).explode.map { p =>
+    val (meta, g) = parseFile(fileName, wholeText)
+    g.explode.map { p =>
       RadiationPoint(
         date = meta.localDateTime,
         radiation_type = meta.radiationType,
@@ -119,8 +115,8 @@ object GridReader {
     }
   }
 
-  /** One file's points as Catalyst rows, the one row decoder of the ingest
-    * write and the `ascgrid` source (so of [[readGrids]]): the cells of
+  /** One file's points as Catalyst rows, the row decoder of the `ascgrid`
+    * source (so of [[readGrids]]): the cells of
     * [[AscGrid.explode]], in its order and arithmetic, carrying `columns`
     * in that order. The name and the grid are parsed EAGERLY, so a bad file
     * throws from this call, never from the iterator. Every `next()` returns
@@ -132,8 +128,7 @@ object GridReader {
       fileName: String,
       text: String,
       columns: Seq[String] = AscGridTable.Schema.fieldNames.toSeq): Iterator[InternalRow] = {
-    val meta = AscGrid.parseFileName(fileName)
-    val g = AscGrid.parse(text)
+    val (meta, g) = parseFile(fileName, text)
     val w = new UnsafeRowWriter(columns.size, 64)
     w.resetRowWriter()
     w.zeroOutNullBytes()

@@ -2,17 +2,15 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog, FileStreamSourceOffset, SerializedOffset}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.grid.GridReader
+import graft.grid.{AscGrid, GridFileMeta, GridParquet, GridReader}
 
 /** Event-driven ingest (reference EP1, SURVEY.md §3): the S3
   * `ObjectCreated` → Lambda choreography becomes a Structured Streaming
@@ -55,18 +53,16 @@ object Ingest {
     }
   }
 
-  /** Drain `inDir` once: parse every new grid file, append good points to
-    * the partitioned serving table; a failing file is re-enqueued for the
-    * next drain until it has failed `maxAttempts` times, then appended to
-    * the quarantine dir (path + error + attempts as JSON). Returns after
-    * the drain.
+  /** Drain `inDir` once: parse every new grid file, write each good one as
+    * its own object of the partitioned serving table ([[GridParquet]]); a
+    * failing file is re-enqueued for the next drain until it has failed
+    * `maxAttempts` times, then appended to the quarantine dir (path + error
+    * + attempts as JSON). Returns after the drain.
     *
     * `parse` gets each file's original name and its text as
-    * [[GridReader.decodeLossy]] decodes it. It is injectable for
-    * fault-injection tests; production callers use
-    * [[GridReader.pointRows]]. It must throw EAGERLY for a bad file: an
-    * iterator that throws while it is consumed fails the task instead of
-    * routing the file to redrive.
+    * [[GridReader.decodeLossy]] decodes it, and returns the parsed name and
+    * grid, so a bad file fails it, eagerly. It is injectable for
+    * fault-injection tests; production callers use [[GridReader.parseFile]].
     */
   def runAvailableNow(
       spark: SparkSession,
@@ -76,7 +72,7 @@ object Ingest {
       archiveDir: String,
       quarantineDir: String,
       maxAttempts: Int = DefaultMaxAttempts,
-      parse: (String, String) => Iterator[InternalRow] = GridReader.pointRows(_, _)): StreamingQuery = {
+      parse: (String, String) => (GridFileMeta, AscGrid) = GridReader.parseFile(_, _)): StreamingQuery = {
     val query = start(spark, inDir, servingDir, checkpointDir, archiveDir,
       quarantineDir, maxAttempts, parse, Trigger.AvailableNow(), None)
     query.awaitTermination()
@@ -99,8 +95,9 @@ object Ingest {
     * kill; between micro-batches (and across graceful stop/restart) the
     * checkpoint makes processing exactly-once. The reference has the
     * identical window (bom/bom.py processes, then deletes the SQS
-    * message), so parity is by design, not accident. `parse` has the
-    * eager-failure contract of [[runAvailableNow]].
+    * message), and the same remedy: a replayed file replaces its one
+    * serving object, as the reference's S3 key does, so a replay never
+    * duplicates points. `parse` is as in [[runAvailableNow]].
     */
   def runProcessingTime(
       spark: SparkSession,
@@ -112,7 +109,7 @@ object Ingest {
       maxAttempts: Int = DefaultMaxAttempts,
       intervalMs: Long = 500L,
       maxFilesPerTrigger: Int = 4,
-      parse: (String, String) => Iterator[InternalRow] = GridReader.pointRows(_, _)): StreamingQuery = {
+      parse: (String, String) => (GridFileMeta, AscGrid) = GridReader.parseFile(_, _)): StreamingQuery = {
     start(spark, inDir, servingDir, checkpointDir, archiveDir, quarantineDir,
       maxAttempts, parse, Trigger.ProcessingTime(intervalMs), Some(maxFilesPerTrigger))
   }
@@ -129,7 +126,7 @@ object Ingest {
       archiveDir: String,
       quarantineDir: String,
       maxAttempts: Int,
-      parse: (String, String) => Iterator[InternalRow],
+      parse: (String, String) => (GridFileMeta, AscGrid),
       trigger: Trigger,
       maxFilesPerTrigger: Option[Int]): StreamingQuery = {
     val reader = spark.readStream.format("binaryFile").schema(BinaryFileFormat.schema)
@@ -148,26 +145,15 @@ object Ingest {
       .start()
   }
 
-  /** Open partition writers per serving-write task; each buffers a row group. */
-  private[graft] val MaxOpenWriters = 4
-
-  /** Per-batch routing in one pass, with no cache and no sort: each file's
-    * bytes are decoded once with [[GridReader.decodeLossy]], as the reference
-    * does, inside the job that appends the good files' points to the
-    * serving table, straight into Catalyst rows that stream into the open
-    * parquet writer of the file's one partition. A writer limit makes Spark
-    * plan no per-task sort; past [[MaxOpenWriters]] partitions in one task
-    * the writer sorts the rest itself. The limit goes on the micro-batch's
-    * session, the stream's private clone, so no write of the caller's
-    * session changes. A failed file adds one `(path, attempt, err)` to an
-    * accumulator, read on the driver once the write returns — never text or
-    * points; a write only merges its successful tasks' updates, and a
-    * re-run stage may add a file twice, hence `distinct`. A clean batch is
-    * one job. A failed file with attempts left is re-enqueued EXECUTOR-SIDE,
-    * with its original bytes, from a second, unparsed read of the batch
-    * filtered to the failed paths;
-    * an exhausted one is appended to the quarantine as JSON. inDir is
-    * executor-visible: the read tasks run there.
+  /** Per-batch routing in one job, with no cache and no SQL write: each
+    * file's bytes are decoded once with [[GridReader.decodeLossy]], as the
+    * reference does, parsed, and a good file is written straight from its grid
+    * as its one serving object ([[GridParquet.write]]), replacing what a re-run
+    * batch or a re-landed file of that name wrote. The job returns one
+    * `(path, attempt, err)` per failed file. One with attempts left is
+    * re-enqueued EXECUTOR-SIDE, with its original bytes, from a second,
+    * unparsed read of the batch (inDir is executor-visible); an exhausted one
+    * is appended to the quarantine as JSON.
     */
   private[streaming] def processBatch(
       batch: DataFrame,
@@ -177,25 +163,23 @@ object Ingest {
       quarantineDir: String,
       inDir: String,
       maxAttempts: Int,
-      parse: (String, String) => Iterator[InternalRow]): Unit = {
+      parse: (String, String) => (GridFileMeta, AscGrid)): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     // the file scan drops zero-byte files, so they join as empty content
     val files = batch.as[(String, Array[Byte])]
       .union(emptyFiles(spark, checkpointDir, batchId).map(_ -> Array.emptyByteArray).toDS())
-    val failures = spark.sparkContext.collectionAccumulator[(String, Int, String)]
-    val points = files.queryExecution.toRdd.flatMap { f =>
+    val out = new GridParquet(spark, servingDir)
+    val failed = files.queryExecution.toRdd.flatMap { f =>
       val path = f.getString(0)
       val (attempt, logical) = attemptOf(path)
       // parse under the ORIGINAL name: filename metadata is attempt-invariant
-      try parse(logical, GridReader.decodeLossy(f.getBinary(1))) catch { case NonFatal(e) =>
-        failures.add((path, attempt, GridReader.errorText(e)))
-        Iterator.empty
+      Try(parse(logical, GridReader.decodeLossy(f.getBinary(1)))) match {
+        case Success((meta, g)) => out.write(meta, g); None
+        case Failure(e) => Some((path, attempt, GridReader.errorText(e)))
       }
-    }
-    spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", MaxOpenWriters)
-    GridReader.writePartitioned(GridReader.points(spark, points), servingDir)
-    val (retry, exhausted) = failures.value.asScala.toSeq.distinct.partition(_._2 < maxAttempts)
+    }.collect()
+    val (retry, exhausted) = failed.toSeq.partition(_._2 < maxAttempts)
     if (retry.nonEmpty)
       files.filter($"path".isin(retry.map(_._1): _*)).foreachPartition {
         (it: Iterator[(String, Array[Byte])]) =>

@@ -1,10 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.StructType
 
 /** Accessor for Spark's `private[sql]` Dataset.ofRows — the only way to
   * materialize a DataFrame from a custom LogicalPlan (Spark 4 exposes no
@@ -14,8 +11,4 @@ object DatasetBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** A DataFrame over rows already in Catalyst's internal form: no encoder. */
-  def ofInternalRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

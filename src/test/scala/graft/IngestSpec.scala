@@ -6,10 +6,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.grid.{GridFixtures, GridReader}
+import graft.grid.{AscGrid, GridFileMeta, GridFixtures, GridReader}
 import graft.streaming.Ingest
 
 /** Batch + streaming ingest end-to-end over the embedded fixtures. */
@@ -117,11 +116,11 @@ class IngestSpec extends AnyFunSuite {
 
     IngestFlaky.calls.set(0)
     // fails the first 2 parse attempts, then behaves — a transient fault
-    val flaky: (String, String) => Iterator[InternalRow] =
+    val flaky: (String, String) => (GridFileMeta, AscGrid) =
       (name, text) => {
         if (IngestFlaky.calls.getAndIncrement() < 2)
           sys.error("transient downstream failure")
-        GridReader.pointRows(name, text)
+        GridReader.parseFile(name, text)
       }
 
     (1 to 3).foreach { _ =>
@@ -291,10 +290,10 @@ class IngestSpec extends AnyFunSuite {
     }
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
     IngestFlaky.calls.set(0)
-    val counting: (String, String) => Iterator[InternalRow] =
+    val counting: (String, String) => (GridFileMeta, AscGrid) =
       (name, text) => {
         IngestFlaky.calls.incrementAndGet()
-        GridReader.pointRows(name, text)
+        GridReader.parseFile(name, text)
       }
     spark.sparkContext.addSparkListener(listener)
     try Ingest.runAvailableNow(spark, in.toString, serving,
@@ -367,51 +366,83 @@ class IngestSpec extends AnyFunSuite {
       s"retry bytes differ: ${retried.take(8).map(b => f"${b & 0xff}%02X").mkString(" ")}")
   }
 
-  test("a clean drain plans no sort in the serving-table write") {
+  test("a clean drain writes one parquet object per grid file, with no SQL write") {
     import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SerializeFromObjectExec, SortExec}
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    val in = tmp("no-sort-in"); writeFixtures(in)
-    val serving = tmp("no-sort-serving").toString
-    // the executed plan of every partitioned file write the drain runs
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // those that build a point object or collect metrics per row
-    val perPoint = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val in = tmp("one-object-in"); writeFixtures(in)
+    val serving = tmp("one-object-serving")
+    // every executed plan reported while the listener is registered
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        qe.executedPlan.foreach {
-          case w: DataWritingCommandExec => w.cmd match {
-            case c: InsertIntoHadoopFsRelationCommand if c.partitionColumns.nonEmpty =>
-              // points reach the writer as Catalyst rows, with no per-row
-              // routing (added first: the wait below ends on `writes`)
-              if (w.exists(p => p.isInstanceOf[SerializeFromObjectExec] ||
-                  p.isInstanceOf[CollectMetricsExec])) perPoint.add(w.toString)
-              writes.add(if (w.exists(_.isInstanceOf[SortExec])) s"sorted:\n$w" else "unsorted")
-            case _ =>
-          }
-          case _ =>
-        }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.executedPlan)
     }
     // the stream's session is cloned at start, so it inherits the listener
     spark.listenerManager.register(listener)
-    try Ingest.runAvailableNow(spark, in.toString, serving,
-      tmp("no-sort-chk").toString, tmp("no-sort-archive").toString,
-      tmp("no-sort-quarantine").toString)
-    finally spark.listenerManager.unregister(listener)
-    // listeners are told on the listener bus, after the write returns
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(spark.read.parquet(serving).count() == 14)
-    assert(!writes.isEmpty, "no serving-table write was reported")
-    writes.forEach(w => assert(w == "unsorted", w))
-    assert(perPoint.isEmpty, perPoint.toString)
+    try {
+      Ingest.runAvailableNow(spark, in.toString, serving.toString,
+        tmp("one-object-chk").toString, tmp("one-object-archive").toString,
+        tmp("one-object-quarantine").toString)
+      // listeners are told in order on the listener bus: once this marker's
+      // plan is reported, every plan of the drain has been
+      spark.range(3).toDF("one_object_marker").collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_.toString.contains("one_object_marker")) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.asScala.exists(_.toString.contains("one_object_marker")), "the marker was never reported")
+    // the AQE-aware traversal also looks inside adaptive plans
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val sqlWrites = plans.asScala.flatMap(helper.collect(_) {
+      case w: DataWritingCommandExec if (w.cmd match {
+        case c: InsertIntoHadoopFsRelationCommand => c.partitionColumns.nonEmpty
+        case _ => false
+      }) => w
+      case p @ (_: SortExec | _: SerializeFromObjectExec | _: CollectMetricsExec) => p
+    })
+    assert(sqlWrites.isEmpty, sqlWrites.mkString("\n"))
+    // each fixture is exactly one <base>.snappy.parquet object in its partition
+    val objects = Files.walk(serving).iterator.asScala.filter(Files.isRegularFile(_))
+      .map(serving.relativize(_).toString).filterNot(_.split('/').last.startsWith(".")).toSeq
+    assert(objects.sorted == GridFixtures.files.map { f =>
+      val m = AscGrid.parseFileName(f.name)
+      s"year=${m.year}/month=${m.month}/day=${m.day}/hour=${m.hour}/${m.baseName}.snappy.parquet"
+    }.sorted)
+    assert(spark.read.parquet(serving.toString).count() == 14)
+  }
+
+  test("a re-run batch replaces its objects and never duplicates them") {
+    val in = tmp("rerun-in"); writeFixtures(in)
+    val serving = tmp("rerun-serving")
+    val checkpoint = tmp("rerun-chk")
+    def drain(): Unit = Ingest.runAvailableNow(spark, in.toString, serving.toString,
+      checkpoint.toString, tmp("rerun-archive").toString, tmp("rerun-quarantine").toString)
+    def served(): (Long, Long) = {
+      val r = spark.read.parquet(serving.toString).selectExpr("count(*)", "sum(radiation)").head
+      (r.getLong(0), r.getLong(1))
+    }
+    def objects(): Seq[String] = Files.walk(serving).iterator.asScala
+      .filter(Files.isRegularFile(_)).map(_.getFileName.toString).filterNot(_.startsWith(".")).toSeq.sorted
+    drain()
+    val (first, firstObjects) = (served(), objects())
+    // without batch 0's commit (and its checksum sidecar), the next run
+    // re-runs batch 0 over the same files
+    Files.delete(checkpoint.resolve("commits/0"))
+    Files.deleteIfExists(checkpoint.resolve("commits/.0.crc"))
+    drain()
+    assert(Files.exists(checkpoint.resolve("commits/0")), "batch 0 was not re-run")
+    assert(served() == first)
+    assert(first._1 == 14L)
+    assert(objects() == firstObjects)
+    assert(objects() == GridFixtures.files.map(f =>
+      AscGrid.parseFileName(f.name).baseName + ".snappy.parquet").sorted)
   }
 
   test("more partitions in one write task than the writer limit: every row lands") {
     val in = tmp("fallback-in")
     // one tiny grid per UTC hour, each its own Sydney-local hour partition
-    val hours = 1 to Ingest.MaxOpenWriters + 2
+    val hours = 1 to 6
     hours.foreach { h =>
       Files.writeString(in.resolve(f"IDZ00026_radiation_20180105_$h%02d00.txt"),
         s"ncols 2\nnrows 1\nxllcorner 112.0\nyllcorner -44.0\ncellsize 0.5\n" +
