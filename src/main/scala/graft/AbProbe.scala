@@ -56,7 +56,10 @@ object AbProbe {
       pass.map { case (n, (t, _)) => n -> t }
     }
 
-    // uncounted warm-up pass (JIT, parquet footers, codegen cache)
+    // uncounted warm-up pass (JIT, parquet footers); it also compiles
+    // every generated class once, and the counted reps reuse them only
+    // because the codegen cache holds the whole list
+    // (GraftSession.CodegenCacheEntries, far above Spark's 100)
     orExit(Bench.sweep(spark, sfDir, names))
 
     // interleaved counted reps: round-robin over the list

@@ -147,11 +147,19 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
+    // Classes janino compiled per sweep (local artifact only): with the
+    // codegen cache holding the suite (GraftSession.CodegenCacheEntries)
+    // a repeated sweep compiles a few percent of the first; thousands
+    // mean the cache thrashes and every warm sweep pays compilation again.
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val sweepGc = collection.mutable.ArrayBuffer.empty[Long]
+    val sweepCompiles = collection.mutable.ArrayBuffer.empty[Long]
     val sweeps = (1 to iters).map { _ =>
-      val g0 = gcMs
+      val (g0, c0) = (gcMs, compiles)
       val r = sweep(spark, sfDir, names).toMap
       sweepGc += (gcMs - g0)
+      sweepCompiles += (compiles - c0)
       r
     }
 
@@ -198,6 +206,7 @@ object Bench {
         s""""filter":$filterJson,"query_count":${names.size},""" +
         s""""iter_totals":[${iterTotals.mkString(",")}],""" +
         s""""iter_gc_ms":[${sweepGc.mkString(",")}],""" +
+        s""""iter_codegen_classes":[${sweepCompiles.mkString(",")}],""" +
         s""""iter_queries":$iterQs,"sf":"${esc(sfDir)}"}"""
     // only a FULL sweep is the round artifact — a filtered subset run
     // (headroom/iteration) must not clobber it. An EXPLICIT out name is

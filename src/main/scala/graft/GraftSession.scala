@@ -9,6 +9,24 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** `spark.sql.codegen.cache.maxEntries` for every session built here:
+    * the size of Spark's LRU cache of janino-compiled generated classes.
+    * Spark's default of 100 is below the engine's working set, so every
+    * repeated pass recompiled nearly every stage. Sized from
+    * `CodegenMetrics.METRIC_COMPILATION_TIME` counts per `Bench` sweep:
+    * the first of a full 267-query sweep compiles 3,592 classes at sf0.01
+    * and 3,599 at sf0.1, and 4096 is the next power of two above them. A
+    * second sweep then compiles about 100 (perfbench's 7 `query_suite`
+    * queries: 155 per warm pass with the default, 0 by the third pass).
+    *
+    * The conf is static: `CodeGenerator`'s static initialiser reads it
+    * once per JVM, at the first compile. It takes effect only when the
+    * JVM's first session is built here, before anything is compiled; a
+    * session built elsewhere first fixes the cache at its own size for
+    * the life of the JVM.
+    */
+  val CodegenCacheEntries = 4096
+
   /** Harness-shaped local session with graft extensions installed.
     * `getOrCreate` silently ignores builder extensions/configs when a
     * session already exists in the JVM, so the native functions are
@@ -36,6 +54,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     GraftExtensions.register(spark)
@@ -57,6 +76,7 @@ object GraftSession {
     *    reprocessing, the reference's ad-hoc-reload model).
     *  - timezone pinned UTC: all rendering to Sydney-local happens in
     *    expressions, never via session state.
+    *  - codegen cache at [[CodegenCacheEntries]], as in `local`.
     */
   def productionBuilder(appName: String): SparkSession.Builder =
     SparkSession.builder()
@@ -69,5 +89,6 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", 256L * 1024 * 1024)
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.parquet.compression.codec", "zstd")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .withExtensions(new GraftExtensions)
 }

@@ -67,7 +67,10 @@ object QProfile {
     })
 
     names.foreach { case (n, fn) =>
-      Bench.runNoop(spark, sfDir, fn) // warm-up (JIT, codegen cache, parquet footers)
+      // warm-up (JIT, parquet footers); the measured run reuses its
+      // generated classes while the codegen cache holds them
+      // (GraftSession.CodegenCacheEntries)
+      Bench.runNoop(spark, sfDir, fn)
       lock.synchronized { stages.clear(); jobs.clear(); jobStages.clear() }
       collecting = true
       val wall = Bench.runNoop(spark, sfDir, fn)

@@ -91,7 +91,7 @@ object GraphRank {
     * [[Iterations]] rounds, highest authority first.
     */
   def q123(spark: SparkSession, dir: String): DataFrame = {
-    val edges = syndicationEdges(spark, dir).localCheckpoint(true)
+    val edges = syndicationEdges(spark, dir)
     val outdeg = edges.groupBy(col("src_from")).agg(count(lit(1)).as("d"))
     val indeg = edges.groupBy(col("src_to")).agg(count(lit(1)).as("i"))
     val nodes = table(spark, dir, "documents")
@@ -408,7 +408,7 @@ object GraphRank {
     * broadcast.
     */
   def q206(spark: SparkSession, dir: String): DataFrame = {
-    val edges = syndicationEdges(spark, dir).localCheckpoint(true)
+    val edges = syndicationEdges(spark, dir)
     val nodes = table(spark, dir, "documents")
       .select(col("source")).distinct().localCheckpoint(true)
     // each half-step is checkpointed: hub(k) feeds auth(k) AND the
@@ -543,7 +543,7 @@ object GraphRank {
     * count.
     */
   def q216(spark: SparkSession, dir: String): DataFrame = {
-    val edges = syndicationEdges(spark, dir).localCheckpoint(true)
+    val edges = syndicationEdges(spark, dir)
     val ue = edges.select(col("src_from").as("s"), col("src_to").as("t"))
       .unionAll(edges.select(col("src_to").as("s"), col("src_from").as("t")))
       .distinct()
