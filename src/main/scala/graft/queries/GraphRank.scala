@@ -1,6 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Artifacts
@@ -26,9 +28,9 @@ import graft.Tables.table
   *   2. **Rank iteration (domain-scale, tiny by comparison)**: the edge
   *      set collapses to DISTINCT source pairs — at worst millions of
   *      rows when the corpus is 100 TB — and [[Iterations]] rounds of
-  *      fixed-point PageRank run over it. Edges are `localCheckpoint`ed
-  *      once so the corpus-scale lineage is not replayed per round (the
-  *      [[graft.ops.ConnectedComponents]] precedent).
+  *      fixed-point PageRank run over it in one task, bounded by
+  *      [[MaxRankGraphRows]]. Edges are `localCheckpoint`ed once so the
+  *      corpus-scale lineage is never replayed.
   *
   * All rank arithmetic is EXACT int64 fixed-point (scale [[RankScale]]):
   * `rank_{k+1}(v) = (15*(S div n)) div 100 + (85 * sum_in(rank_k(u) div
@@ -87,63 +89,61 @@ object GraphRank {
         .localCheckpoint()
     }
 
-  /** q123: per-source out/in degree and fixed-point PageRank after
-    * [[Iterations]] rounds, highest authority first.
+  /** Rows q123's rank task may receive (distinct sources + edges): the
+    * task holds the whole domain graph. At worst ~200 B a row (an
+    * interned ~80 B source, its map entry and four per-node counters),
+    * so 2^21 rows ≈ 420 MB of the ~700 MB of user memory, (2048 - 300)
+    * x (1 - 0.6 `spark.memory.fraction`), that a 2 GB heap (perfbench's
+    * `--heap`, the smallest run here) leaves to tasks. The old per-round
+    * broadcast hints assumed as much, unchecked: each executor held
+    * domain-sized tables whole. Past it the task fails by this name.
     */
-  def q123(spark: SparkSession, dir: String): DataFrame = {
-    val edges = syndicationEdges(spark, dir)
-    val outdeg = edges.groupBy(col("src_from")).agg(count(lit(1)).as("d"))
-    val indeg = edges.groupBy(col("src_to")).agg(count(lit(1)).as("i"))
-    val nodes = table(spark, dir, "documents")
-      .select(col("source")).distinct().localCheckpoint(true)
-    val params = broadcast(nodes.agg(count(lit(1)).as("n")))
+  val MaxRankGraphRows: Long = 1L << 21
 
-    // every per-iteration join side is bounded by the DOMAIN count
-    // (sources, not documents — at most millions of rows even under a
-    // 100 TB corpus), so broadcast hints kill the 4 rounds of tiny
-    // exchanges the static planner would otherwise emit as SMJs.
-    //
-    // OPTIMIZATION r16 (guide §2.4): the rank frame no longer
-    // materializes over ALL nodes each round — a node absent from the
-    // contribution aggregate has rank = teleport base exactly (the old
-    // coalesce(c, 0) arm), so each round is edges ⟕ broadcast(contribs)
-    // with the rank reconstructed inline, and the full-node frame is
-    // built once at the end. Removes a nodes-side join + projection
-    // per round (4 fewer broadcast stages, ~8 fewer AQE jobs) while
-    // computing bit-identical integer ranks.
-    val rankOf = expr(s"(15 * ($RankScale div n)) div 100" +
-      " + (85 * coalesce(c, 0)) div 100")
-    // round 1 reads the uniform init rank directly — no contribs yet
-    var contribs = edges.crossJoin(params)
-      .join(broadcast(outdeg), Seq("src_from"))
-      .select(col("src_to").as("source"),
-        expr(s"($RankScale div n) div d").as("c"))
-      .groupBy(col("source")).agg(sum(col("c")).as("c"))
-    for (_ <- 2 to Iterations) {
-      contribs = edges.crossJoin(params)
-        .join(broadcast(contribs.withColumnRenamed("source", "src_from")),
-          Seq("src_from"), "left")
-        .join(broadcast(outdeg), Seq("src_from"))
-        .select(col("src_to").as("source"),
-          expr(s"((15 * ($RankScale div n)) div 100" +
-            " + (85 * coalesce(c, 0)) div 100) div d").as("c"))
-        .groupBy(col("source")).agg(sum(col("c")).as("c"))
-    }
-    val rank = nodes.crossJoin(params)
-      .join(broadcast(contribs), Seq("source"), "left")
-      .select(col("source"), rankOf.as("rank"))
+  /** q123: per-source out/in degree and fixed-point PageRank after
+    * [[Iterations]] rounds, highest authority first. Distinct sources
+    * and the memoized edges meet in one partition, where one task runs
+    * the whole fixed point: one stage, not an aggregate and a broadcast
+    * stage per round. That partition already satisfies the ORDER BY.
+    * `rankSources` takes the [[MaxRankGraphRows]] guard as a spec hook.
+    */
+  def q123(spark: SparkSession, dir: String): DataFrame = rankSources(spark, dir)
 
-    nodes
-      .join(broadcast(outdeg.withColumnRenamed("src_from", "source")),
-        Seq("source"), "left")
-      .join(broadcast(indeg.withColumnRenamed("src_to", "source")),
-        Seq("source"), "left")
-      .join(broadcast(rank), Seq("source"))
-      .select(col("source"),
-        coalesce(col("d"), lit(0L)).as("out_deg"),
-        coalesce(col("i"), lit(0L)).as("in_deg"),
-        col("rank"))
+  private[graft] def rankSources(spark: SparkSession, dir: String,
+      maxRows: Long = MaxRankGraphRows): DataFrame = {
+    import spark.implicits._
+    table(spark, dir, "documents").select(col("source")).distinct()
+      .select(col("source"), lit(null).cast("string")) // node rows: no target
+      .unionAll(syndicationEdges(spark, dir)).repartition(1)
+      .mapPartitions(rows => rankGraph(rows, maxRows))
+      .toDF("source", "out_deg", "in_deg", "rank")
       .orderBy(col("rank").desc, col("source"))
+  }
+
+  /** The fixed point in the task; edge endpoints also arrive as nodes. */
+  private def rankGraph(rows: Iterator[Row], maxRows: Long): Iterator[(String, Long, Long, Long)] = {
+    val ids = mutable.LinkedHashMap.empty[String, Int]
+    def id(s: String): Int = ids.getOrElseUpdate(s, ids.size)
+    val src, dst = mutable.ArrayBuilder.make[Int]
+    var seen = 0L
+    for (r <- rows) {
+      seen += 1
+      if (seen > maxRows) throw new IllegalStateException("GraphRank.MaxRankGraphRows " +
+        s"exceeded: the q123 rank task received ${seen + rows.size} rows, bound $maxRows")
+      if (r.isNullAt(1)) id(r.getString(0))
+      else { src += id(r.getString(0)); dst += id(r.getString(1)) }
+    }
+    val (from, to, n) = (src.result(), dst.result(), ids.size)
+    val outDeg, inDeg = new Array[Int](n)
+    for (e <- from.indices) { outDeg(from(e)) += 1; inDeg(to(e)) += 1 }
+    var rank = Array.fill(n)(RankScale / n)
+    for (_ <- 1 to Iterations) {
+      val c = new Array[Long](n)
+      for (e <- from.indices) c(to(e)) += rank(from(e)) / outDeg(from(e))
+      rank = c.map(x => (15 * (RankScale / n)) / 100 + (85 * x) / 100)
+    }
+    ids.keysIterator.zipWithIndex.map { case (s, i) =>
+      (s, outDeg(i).toLong, inDeg(i).toLong, rank(i)) }
   }
 
   val q123Oracle: String = {

@@ -113,4 +113,16 @@ class GraphRankPropertySpec extends AnyFunSuite {
     }
     assert(Dedup.q127(spark, dir).count() == 0)
   }
+
+  test("a graph over the rank-task bound fails by the guard's name") {
+    // three sources and no edges: the rank task receives 3 rows
+    val dir = corpus(Seq((1L, "a b c", "A"), (2L, "d e f", "B"), (3L, "g h i", "C")))
+    val e = intercept[Exception](GraphRank.rankSources(spark, dir, maxRows = 2).collect())
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(msg.contains("GraphRank.MaxRankGraphRows exceeded"), msg)
+    assert(msg.contains("received 3 rows") && msg.contains("bound 2"), msg)
+    // at the bound it ranks as usual
+    assert(GraphRank.rankSources(spark, dir, maxRows = 3).count() == 3)
+  }
 }

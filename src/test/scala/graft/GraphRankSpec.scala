@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,6 +66,34 @@ class GraphRankSpec extends AnyFunSuite {
     // output is ordered by authority: rank DESC, then source
     val order = out.map(r => (-r.getAs[Long]("rank"), r.getString(0)))
     assert(order.sameElements(order.sorted), "rank DESC, source ASC order")
+  }
+
+  test("a warm q123 call submits at most 4 jobs: the fixed point runs in one task") {
+    def run(): Unit = GraphRank.q123(spark, sfDir).write.format("noop").mode("overwrite").save()
+    run() // the first call builds the memoized edges
+    val sc = spark.sparkContext
+    // the job group of every job started while the listener is attached
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("q123-warm", "warm q123 call")
+      try run() finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen,
+      // every job of the warm call has been counted
+      sc.setJobGroup("q123-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("q123-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("q123-marker"), "marker job never reached the listener")
+    } finally sc.removeSparkListener(listener)
+    // footer read, sources distinct, repartition, result
+    val jobs = groups.asScala.count(_ == "q123-warm")
+    assert(jobs >= 1 && jobs <= 4, s"warm q123 submitted $jobs jobs")
   }
 
   test("edges point copier -> original and never link a source to itself") {
