@@ -26,11 +26,9 @@ import graft.Tables.table
   *      the earlier one (crawl ids are assignment-ordered), giving a
   *      directed edge copier-source -> original-source.
   *   2. **Rank iteration (domain-scale, tiny by comparison)**: the edge
-  *      set collapses to DISTINCT source pairs — at worst millions of
-  *      rows when the corpus is 100 TB — and [[Iterations]] rounds of
-  *      fixed-point PageRank run over it in one task, bounded by
-  *      [[MaxRankGraphRows]]. Edges are `localCheckpoint`ed once so the
-  *      corpus-scale lineage is never replayed.
+  *      set collapses to DISTINCT source pairs, `localCheckpoint`ed once,
+  *      and [[Iterations]] rounds of fixed-point PageRank run over it in
+  *      one task, bounded by [[MaxRankGraphBytes]].
   *
   * All rank arithmetic is EXACT int64 fixed-point (scale [[RankScale]]):
   * `rank_{k+1}(v) = (15*(S div n)) div 100 + (85 * sum_in(rank_k(u) div
@@ -89,49 +87,51 @@ object GraphRank {
         .localCheckpoint()
     }
 
-  /** Rows q123's rank task may receive (distinct sources + edges): the
-    * task holds the whole domain graph. At worst ~200 B a row (an
-    * interned ~80 B source, its map entry and four per-node counters),
-    * so 2^21 rows ≈ 420 MB of the ~700 MB of user memory, (2048 - 300)
-    * x (1 - 0.6 `spark.memory.fraction`), that a 2 GB heap (perfbench's
-    * `--heap`, the smallest run here) leaves to tasks. The old per-round
-    * broadcast hints assumed as much, unchecked: each executor held
-    * domain-sized tables whole. Past it the task fails by this name.
+  /** Heap q123's rank task may fill with the domain graph it holds
+    * whole; past it the task fails by this name, not out of memory.
+    * Measured (64-bit JVM, compressed oops): a source retains ~115 B plus
+    * 1 B a Latin-1 char, and the rounds add 32 B of arrays; an edge 9 to
+    * 17 B in two int builders, 25 B while one doubles. So a source costs
+    * [[SourceBytes]] plus 2 B a char (UTF-16 too), an edge [[EdgeBytes]].
+    * 256 MiB is a third of the ~700 MB of user memory, (2048 - 300) x
+    * (1 - 0.6 `spark.memory.fraction`), of a 2 GB heap (perfbench's
+    * `--heap`), as the old per-round broadcasts assumed, unchecked; graphs
+    * at the bound ranked in a 1 GB heap. Served graphs are tiny: 20
+    * sources and 19, 22 and 163 edges at sf0.001, sf0.01 and sf0.1.
     */
-  val MaxRankGraphRows: Long = 1L << 21
+  val MaxRankGraphBytes: Long = 256L << 20
+  private[graft] val SourceBytes: Long = 150L
+  private[graft] val EdgeBytes: Long = 25L
 
   /** q123: per-source out/in degree and fixed-point PageRank after
-    * [[Iterations]] rounds, highest authority first. Distinct sources
-    * and the memoized edges meet in one partition, where one task runs
-    * the whole fixed point: one stage, not an aggregate and a broadcast
-    * stage per round. That partition already satisfies the ORDER BY.
-    * `rankSources` takes the [[MaxRankGraphRows]] guard as a spec hook.
+    * [[Iterations]] rounds, highest authority first, all rounds in one
+    * task over one partition, which also satisfies the ORDER BY.
+    * `rankSources` takes the [[MaxRankGraphBytes]] bound as a spec hook.
     */
   def q123(spark: SparkSession, dir: String): DataFrame = rankSources(spark, dir)
 
   private[graft] def rankSources(spark: SparkSession, dir: String,
-      maxRows: Long = MaxRankGraphRows): DataFrame = {
+      maxBytes: Long = MaxRankGraphBytes): DataFrame = {
     import spark.implicits._
     table(spark, dir, "documents").select(col("source")).distinct()
       .select(col("source"), lit(null).cast("string")) // node rows: no target
       .unionAll(syndicationEdges(spark, dir)).repartition(1)
-      .mapPartitions(rows => rankGraph(rows, maxRows))
+      .mapPartitions(rows => rankGraph(rows, maxBytes))
       .toDF("source", "out_deg", "in_deg", "rank")
       .orderBy(col("rank").desc, col("source"))
   }
 
   /** The fixed point in the task; edge endpoints also arrive as nodes. */
-  private def rankGraph(rows: Iterator[Row], maxRows: Long): Iterator[(String, Long, Long, Long)] = {
+  private def rankGraph(rows: Iterator[Row], maxBytes: Long): Iterator[(String, Long, Long, Long)] = {
     val ids = mutable.LinkedHashMap.empty[String, Int]
-    def id(s: String): Int = ids.getOrElseUpdate(s, ids.size)
     val src, dst = mutable.ArrayBuilder.make[Int]
-    var seen = 0L
+    var held = 0L
+    def id(s: String): Int = ids.getOrElseUpdate(s, { held += SourceBytes + 2L * s.length; ids.size })
     for (r <- rows) {
-      seen += 1
-      if (seen > maxRows) throw new IllegalStateException("GraphRank.MaxRankGraphRows " +
-        s"exceeded: the q123 rank task received ${seen + rows.size} rows, bound $maxRows")
       if (r.isNullAt(1)) id(r.getString(0))
-      else { src += id(r.getString(0)); dst += id(r.getString(1)) }
+      else { src += id(r.getString(0)); dst += id(r.getString(1)); held += EdgeBytes }
+      if (held > maxBytes) throw new IllegalStateException("GraphRank.MaxRankGraphBytes exceeded: " +
+        s"the q123 rank task holds ${ids.size} sources, ${src.length} edges: $held B, bound $maxBytes")
     }
     val (from, to, n) = (src.result(), dst.result(), ids.size)
     val outDeg, inDeg = new Array[Int](n)

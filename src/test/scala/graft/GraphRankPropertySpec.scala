@@ -114,15 +114,32 @@ class GraphRankPropertySpec extends AnyFunSuite {
     assert(Dedup.q127(spark, dir).count() == 0)
   }
 
-  test("a graph over the rank-task bound fails by the guard's name") {
-    // three sources and no edges: the rank task receives 3 rows
-    val dir = corpus(Seq((1L, "a b c", "A"), (2L, "d e f", "B"), (3L, "g h i", "C")))
-    val e = intercept[Exception](GraphRank.rankSources(spark, dir, maxRows = 2).collect())
-    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+  /** The messages of `e` and its causes, one a line. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .map(t => String.valueOf(t.getMessage)).mkString("\n")
-    assert(msg.contains("GraphRank.MaxRankGraphRows exceeded"), msg)
-    assert(msg.contains("received 3 rows") && msg.contains("bound 2"), msg)
+
+  test("a graph over the rank-task bound fails by the guard's name") {
+    // three one-char sources and no edges
+    val dir = corpus(Seq((1L, "a b c", "A"), (2L, "d e f", "B"), (3L, "g h i", "C")))
+    val need = 3 * (GraphRank.SourceBytes + 2)
+    val msg = messages(intercept[Exception](
+      GraphRank.rankSources(spark, dir, maxBytes = need - 1).collect()))
+    assert(msg.contains("GraphRank.MaxRankGraphBytes exceeded"), msg)
+    assert(msg.contains("3 sources, 0 edges") && msg.contains(s"bound ${need - 1}"), msg)
     // at the bound it ranks as usual
-    assert(GraphRank.rankSources(spark, dir, maxRows = 3).count() == 3)
+    assert(GraphRank.rankSources(spark, dir, maxBytes = need).count() == 3)
+  }
+
+  test("edges cost their own bytes under the bound: more edges than sources still rank") {
+    // the all-identical corpus: 3 two-char sources and 6 edges, 9 rows
+    // that would need more than twice the bound at a source's cost each
+    val dir = corpus((0L to 8L).map(i => (i, toks("w", 30), s"s${i % 3}")))
+    val need = 3 * (GraphRank.SourceBytes + 4) + 6 * GraphRank.EdgeBytes
+    assert(9 * GraphRank.SourceBytes > 2 * need)
+    assert(GraphRank.rankSources(spark, dir, maxBytes = need).count() == 3)
+    val msg = messages(intercept[Exception](
+      GraphRank.rankSources(spark, dir, maxBytes = need - 1).collect()))
+    assert(msg.contains("3 sources, 6 edges") && msg.contains(s"$need B"), msg)
   }
 }
